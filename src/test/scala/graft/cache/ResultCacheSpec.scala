@@ -57,18 +57,42 @@ class ResultCacheSpec extends SparkSpec {
   }
 
   test("restore rebuilds payloads: restart serves hits without recompute") {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions._
-    val cache = new ResultCache(maxSize = 4)
-    // heterogeneous schemas across entries, incl. an empty result
-    cache.put("t", Seq("k" -> "1"), df(5))
-    cache.put("u", Seq("q" -> "x"),
-      df(3).select(col("x"), concat(lit("v"), col("x")).as("s")))
-    cache.put("t", Seq("k" -> "empty"), df(3).filter(col("x") > 99))
+    import org.apache.spark.sql.types.StructType
+    import scala.jdk.CollectionConverters._
+    val cache = new ResultCache(maxSize = 8)
+    val rich = spark.createDataFrame(Seq(
+      Row(1, java.sql.Timestamp.valueOf("2024-03-01 12:34:56.789"),
+        "he said \"hi\" \\ back\\slash", Seq(Row("naïve café — 東京 😀", 0.5), Row(null, -1.25))),
+      Row(2, null, null, null),
+      Row(3, java.sql.Timestamp.valueOf("1999-12-31 23:59:59"), "", Seq.empty[Row]),
+      Row(4, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "tab\tnewline\n{}", Seq(null))
+    ).asJava, StructType.fromDDL(
+      "id INT, ts TIMESTAMP, note STRING, tags ARRAY<STRUCT<name: STRING, w: DOUBLE>>"))
+    // heterogeneous schemas across entries, entries sharing a schema, an
+    // empty result, timestamps, nested array<struct>, nulls and escapes
+    val put = Seq(
+      ("t", Seq("k" -> "1"), df(5)),
+      ("u", Seq("q" -> "x"), df(3).select(col("x"), concat(lit("v"), col("x")).as("s"))),
+      ("t", Seq("k" -> "empty"), df(3).filter(col("x") > 99)),
+      ("t", Seq("k" -> "2"), df(2)),
+      ("u", Seq("q" -> "y"), df(2).select(col("x"), lit("q\"\\ü").as("s"))),
+      ("r", Seq("k" -> "rich"), rich)
+    ).map { case (ns, params, frame) => (ns, params, frame.schema, cache.put(ns, params, frame)) }
     val path = tmpDir("cacherestore") + "/state"
     cache.checkpoint(spark, path)
 
-    val fresh = new ResultCache(maxSize = 4) // "restarted process"
-    assert(fresh.restore(spark, path) === 3)
+    // the payload format is Dataset.toJSON's, entry by entry
+    val payloads = spark.read.parquet(path).collect()
+      .map(r => r.getAs[String]("key") -> r.getSeq[String](r.fieldIndex("payload")).toSeq).toMap
+    put.foreach { case (ns, params, schema, rows) =>
+      val key = ns + "|" + params.map { case (k, v) => s"$k=$v" }.mkString("&")
+      assert(payloads(key) === spark.createDataFrame(rows.asJava, schema).toJSON.collect().toSeq, key)
+    }
+
+    val fresh = new ResultCache(maxSize = 8) // "restarted process"
+    assert(fresh.restore(spark, path) === put.size)
     var computes = 0
     val rows = fresh.getOrElse("u", Seq("q" -> "x")) { computes += 1; df(1) }
     assert(computes === 0, "restored entry must serve without recompute")
@@ -76,7 +100,10 @@ class ResultCacheSpec extends SparkSpec {
       === Seq((1, "v1"), (2, "v2"), (3, "v3")))
     assert(fresh.get("t", Seq("k" -> "1")).get.map(_.getInt(0)).sorted === Seq(1, 2, 3, 4, 5))
     assert(fresh.get("t", Seq("k" -> "empty")).get.isEmpty)
-    assert(fresh.hits.get() === 3 && fresh.misses.get() === 0)
+    put.foreach { case (ns, params, _, original) =>
+      assert(fresh.get(ns, params).get === original, s"$ns $params")
+    }
+    assert(fresh.hits.get() === 3 + put.size && fresh.misses.get() === 0)
   }
 
   test("restore respects capacity and keeps the newest entries") {
@@ -91,5 +118,116 @@ class ResultCacheSpec extends SparkSpec {
     // entries restored oldest-first into an LRU map → the 2 newest survive
     assert(small.get("t", Seq("k" -> "3")).isDefined)
     assert(small.get("t", Seq("k" -> "4")).isDefined)
+  }
+
+  test("restore keeps the most recently used entries, not the newest inserts") {
+    var now = 1000L
+    val cache = new ResultCache(maxSize = 4, clock = () => { now += 1000; now })
+    Seq("A", "B", "C").foreach(k => cache.put("t", Seq("k" -> k), df(1)))
+    cache.get("t", Seq("k" -> "A")) // touch A → B is least recently used
+    val path = tmpDir("cachelru") + "/state"
+    cache.checkpoint(spark, path)
+    assert(cache.checkpointedKeys(spark, path) === Seq("t|k=B", "t|k=C", "t|k=A"))
+    val small = new ResultCache(maxSize = 2)
+    assert(small.restore(spark, path) === 2)
+    assert(small.get("t", Seq("k" -> "A")).isDefined)
+    assert(small.get("t", Seq("k" -> "C")).isDefined)
+    assert(small.get("t", Seq("k" -> "B")).isEmpty)
+  }
+
+  test("put on a present key moves it to most-recent and evicts nothing") {
+    val cache = new ResultCache(maxSize = 3)
+    Seq("A", "B", "C", "B").foreach(k => cache.put("t", Seq("k" -> k), df(1)))
+    assert(cache.size === 3, "re-putting a present key must not evict the LRU head")
+    Seq("D", "E").foreach(k => cache.put("t", Seq("k" -> k), df(1))) // evict A, then C
+    assert(cache.get("t", Seq("k" -> "B")).isDefined)
+    assert(cache.get("t", Seq("k" -> "A")).isEmpty)
+    assert(cache.get("t", Seq("k" -> "C")).isEmpty)
+  }
+
+  test("concurrent misses on one key compute once; a throw releases the waiter") {
+    import java.util.concurrent.{CountDownLatch, Executors}
+    import java.util.concurrent.atomic.AtomicInteger
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val cache = new ResultCache(maxSize = 4)
+      val computes = new AtomicInteger()
+      /** Two callers miss `k`; the first one's thunk blocks until the
+        * second is waiting, then yields `result`.
+        */
+      def race(k: String)(result: => org.apache.spark.sql.DataFrame) = {
+        val entered = new CountDownLatch(1)
+        val release = new CountDownLatch(1)
+        def run = { computes.incrementAndGet(); entered.countDown(); release.await(); result }
+        val missesBefore = cache.misses.get()
+        val first = Future(cache.getOrElse("t", Seq("k" -> k))(run))
+        entered.await()
+        val second = Future(cache.getOrElse("t", Seq("k" -> k))(run))
+        while (cache.misses.get() < missesBefore + 2) Thread.sleep(1)
+        release.countDown()
+        (first, second)
+      }
+
+      val (a, b) = race("ok")(df(3))
+      val (ra, rb) = (Await.result(a, 30.seconds), Await.result(b, 30.seconds))
+      assert(computes.get() === 1)
+      assert(ra === rb && ra.map(_.getInt(0)) === Seq(1, 2, 3))
+
+      computes.set(0)
+      val (c, d) = race("boom")(throw new IllegalStateException("boom"))
+      assert(intercept[IllegalStateException](Await.result(c, 30.seconds)).getMessage === "boom")
+      assert(intercept[IllegalStateException](Await.result(d, 30.seconds)).getMessage === "boom")
+      assert(computes.get() === 1)
+      assert(cache.get("t", Seq("k" -> "boom")).isEmpty, "a failed computation must not be cached")
+      assert(cache.getOrElse("t", Seq("k" -> "boom"))(df(2)).size === 2)
+    } finally pool.shutdownNow()
+  }
+
+  /** Spark jobs started while `body` runs. A sentinel job marks the end:
+    * its start event arrives after every earlier one on the listener bus.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val Sentinel = "resultcachespec.sentinel"
+    val started = new AtomicInteger()
+    val drained = new AtomicBoolean()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Sentinel) != null)) drained.set(true)
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(Sentinel, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Sentinel, null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!drained.get()) {
+        assert(System.currentTimeMillis() < deadline, "listener bus did not drain")
+        Thread.sleep(2)
+      }
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("checkpoint and restore run as many Spark jobs for 12 entries as for 2") {
+    import org.apache.spark.sql.functions.col
+    // one schema per entry: serializing per entry or per schema would
+    // both show up as a count that grows with the entries
+    val jobs = Seq(2, 12).map { n =>
+      val cache = new ResultCache(maxSize = 16)
+      (1 to n).foreach(i => cache.put("t", Seq("k" -> i.toString), df(i).select(col("x").as(s"c$i"))))
+      val path = tmpDir("cachejobs") + "/state"
+      val checkpointJobs = jobsDuring(cache.checkpoint(spark, path))
+      val fresh = new ResultCache(maxSize = 16)
+      val restoreJobs = jobsDuring(assert(fresh.restore(spark, path) === n))
+      (checkpointJobs, restoreJobs)
+    }
+    assert(jobs(0) === jobs(1), "(checkpoint, restore) jobs for 2 entries vs 12")
   }
 }
