@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 import graft.cache.ResultCache
 import graft.operators.{Keywords, TweetSearch, UserQueries}
@@ -12,6 +13,17 @@ import graft.operators.{Keywords, TweetSearch, UserQueries}
   * Differences by design (SURVEY §7.4#6): results come from single
   * declarative plans (no N+1 lookups), the cache keys on the full
   * normalized parameter tuple, and checkpointing is explicit.
+  *
+  * The tweet → author join runs once per Engine, not once per request:
+  * [[tweetsWithAuthors]] is persisted, and a search or user-tweets miss
+  * is one filtered scan of it (one Spark job for a search). Keyword
+  * predicates keep the keyword out of the generated code
+  * ([[graft.operators.Predicates.keywordMatch]]), so a new keyword reuses
+  * the compiled scan.
+  *
+  * PRECONDITION: `users.id` is unique — `TweetIngest.users` dedups on it.
+  * The join runs before each top-k, so a duplicated id would repeat its
+  * tweets inside the top-k, not just next to it.
   */
 final class Engine(
     val spark: SparkSession,
@@ -20,13 +32,24 @@ final class Engine(
     cacheSize: Int = 100,
     cacheTtlSeconds: Double = Double.PositiveInfinity) {
 
-  /** Curated tables, persisted MEMORY_AND_DISK — they are the hot working
-    * set (the reference keeps them server-side in Mongo/MySQL).
+  /** Curated users, persisted MEMORY_AND_DISK — with the tweets below, the
+    * hot working set (the reference keeps them server-side in Mongo/MySQL).
     */
-  lazy val tweets: DataFrame = spark.read.parquet(tweetsPath)
-    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   lazy val users: DataFrame = spark.read.parquet(usersPath)
-    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Every curated tweet left-joined to its author
+    * ([[TweetSearch.withAuthors]]); the one persisted copy of the tweets.
+    * The first request that reads it materializes it.
+    */
+  private lazy val tweetsWithAuthors: DataFrame =
+    TweetSearch.withAuthors(spark.read.parquet(tweetsPath), users)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The curated tweets: [[tweetsWithAuthors]] without the author columns,
+    * read from its cache.
+    */
+  lazy val tweets: DataFrame = tweetsWithAuthors.drop(TweetSearch.AuthorColumns: _*)
 
   val cache = new ResultCache(cacheSize, cacheTtlSeconds)
 
@@ -39,11 +62,11 @@ final class Engine(
       limit: Int = TweetSearch.DefaultLimit): Seq[Row] =
     cache.getOrElse("tweet", Seq(
       "kw" -> keyword.getOrElse(""),
-      "ht" -> hashtags.sorted.mkString(","),
+      "ht" -> tagList(hashtags),
       "lang" -> lang.getOrElse(""),
       "range" -> dateRange.map(r => r._1 + ".." + r._2).getOrElse(""),
       "limit" -> limit.toString)) {
-      TweetSearch.searchWithAuthors(tweets, users, keyword, hashtags, lang, dateRange, limit)
+      TweetSearch.search(tweetsWithAuthors, keyword, hashtags, lang, dateRange, limit)
     }
 
   /** §3.2 user surface (cache.py:164-190). */
@@ -57,9 +80,15 @@ final class Engine(
     cache.getOrElse("user_tweets", Seq(
       "sn" -> screenName,
       "kw" -> keyword.getOrElse(""),
-      "ht" -> hashtags.sorted.mkString(","))) {
-      UserQueries.tweetsForUser(tweets, users, screenName, keyword, hashtags)
+      "ht" -> tagList(hashtags))) {
+      UserQueries.tweetsForUser(tweetsWithAuthors, screenName, keyword, hashtags)
     }
+
+  /** Cache-key form of a hashtag set: sorted, `,`-joined, each tag
+    * escaped so that `Seq("a,b")` and `Seq("a", "b")` stay distinct.
+    */
+  private def tagList(hashtags: Seq[String]): String =
+    hashtags.sorted.map(ResultCache.escape(_, ",")).mkString(",")
 
   /** Sidebars (app.py:156,170-171). */
   def topUsersByFollowers(k: Int = 5): Seq[Row] =

@@ -40,8 +40,14 @@ final class ResultCache(
   val hits = new AtomicLong(0)
   val misses = new AtomicLong(0)
 
+  /** `namespace|k1=v1&k2=v2…`, params sorted by name. Each part is
+    * [[escape]]d, so distinct inputs give distinct keys; a key whose parts
+    * hold none of `%`, `|` (namespace), `&`, `=` (params) is unchanged by
+    * the escaping, so checkpoints of such keys still hit.
+    */
   private def keyOf(namespace: String, params: Seq[(String, String)]): String =
-    namespace + "|" + params.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("&")
+    escape(namespace, "|") + "|" + params.sortBy(_._1)
+      .map { case (k, v) => escape(k, "&=") + "=" + escape(v, "&=") }.mkString("&")
 
   /** LRU probe: hit moves the key to most-recent (cache.py:86-90). */
   def get(namespace: String, params: Seq[(String, String)]): Option[Seq[Row]] =
@@ -184,6 +190,16 @@ final class ResultCache(
 }
 
 object ResultCache {
+
+  /** Percent-encodes `%` and every char of `separators` in `value`, so
+    * joining escaped values with any of those separators is injective. A
+    * value holding none of those chars comes back unchanged.
+    */
+  def escape(value: String, separators: String): String =
+    if (value.forall(c => c != '%' && separators.indexOf(c) < 0)) value
+    else value.flatMap { c =>
+      if (c == '%' || separators.indexOf(c) >= 0) f"%%${c.toInt}%02X" else c.toString
+    }
 
   /** The checkpoint's columns; see [[ResultCache.checkpoint]]. Reading
     * with this schema spares the job that would infer it.

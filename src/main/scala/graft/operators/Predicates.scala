@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.KeywordMatch
 import graft.schema.TwitterSchemas.parseTwitterTime
 
 /** F1-F9 as composable Column builders (SURVEY §2.2).
@@ -18,9 +19,14 @@ object Predicates {
     * `$options: "i"`, app.py:122). Mongo is PCRE, Spark is Java regex —
     * identical for plain keywords; callers passing raw regex should mind
     * the dialect delta (SURVEY §7.4#2).
+    *
+    * Same answers as `col("text").rlike("(?i)" + keyword)`, but through
+    * [[graft.functions.KeywordMatch]]: the keyword stays out of the
+    * generated source, so a search for a new keyword reuses the compiled
+    * whole-stage class instead of compiling one of its own.
     */
   def keywordMatch(keyword: String): Column =
-    col("text").rlike("(?i)" + keyword)
+    KeywordMatch.matches(col("text"), keyword)
 
   /** F2: hashtag membership over the nested entities array — true if any
     * element's `text` is in the list (exact, case-sensitive, matching

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** User-side queries (SURVEY §2.3 J1/J4, §3.2).
   *
   * The reference serves these from MySQL point SELECTs memoized in an LRU
-  * (cache.py:164-190); here they are plain pruned scans / joins.
+  * (cache.py:164-190); here they are plain pruned scans, and a user's
+  * tweets are a filter over the author-joined tweets.
   */
 object UserQueries {
 
@@ -25,18 +26,22 @@ object UserQueries {
       .select("screen_name", "name", "followers_count")
       .limit(k)
 
-  /** J4 chain: screen_name → user id → that user's tweets, with optional
+  /** J4 chain: screen_name → that user's tweets, with optional
     * keyword/hashtag OR-refinement (implementing the *intended* semantics
     * of the reference's clobbered $or, cache.py:180-190) sorted like the
     * reference (retweet_count, favorite_count DESC).
+    *
+    * `tweetsWithAuthors` is [[TweetSearch.withAuthors]], which the engine
+    * joins once, so resolving the screen name is a filter on
+    * `author_screen_name`, not a join per request; the answer has the
+    * curated tweet columns only. Needs `users.id` unique, as that join
+    * does.
     */
   def tweetsForUser(
-      tweets: DataFrame,
-      users: DataFrame,
+      tweetsWithAuthors: DataFrame,
       screenName: String,
       keyword: Option[String] = None,
       hashtags: Seq[String] = Nil): DataFrame = {
-    val uid = broadcast(byScreenName(users, screenName).select(col("id").as("uid")))
     val refine = (keyword, hashtags) match {
       case (Some(k), hs) if hs.nonEmpty =>
         Predicates.keywordMatch(k) || Predicates.hashtagIn(hs)
@@ -44,9 +49,9 @@ object UserQueries {
       case (None, hs) if hs.nonEmpty => Predicates.hashtagIn(hs)
       case _                         => lit(true)
     }
-    tweets
-      .join(uid, col("user_id") === col("uid"), "left_semi")
-      .filter(refine)
+    tweetsWithAuthors
+      .filter(col("author_screen_name") === screenName && refine)
+      .drop(TweetSearch.AuthorColumns: _*)
       .orderBy(col("retweet_count").desc, col("favorite_count").desc, col("id_str"))
   }
 }

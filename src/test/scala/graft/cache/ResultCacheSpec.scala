@@ -26,6 +26,23 @@ class ResultCacheSpec extends SparkSpec {
     assert(cache.get("u", Seq("a" -> "1", "b" -> "2")).isEmpty) // namespace isolation
   }
 
+  test("keys escape their separators: values holding & = | % never share a key") {
+    val cache = new ResultCache(maxSize = 8)
+    cache.put("t", Seq("a" -> "1&b=2", "b" -> ""), df(1))
+    assert(cache.get("t", Seq("a" -> "1", "b" -> "2&b=")).isEmpty)
+    cache.put("t|a=1", Seq("b" -> "2"), df(1))
+    assert(cache.get("t", Seq("a" -> "1|b=2")).isEmpty)
+    cache.put("t", Seq("a" -> "%26"), df(1))
+    assert(cache.get("t", Seq("a" -> "&")).isEmpty)
+    // a key without those chars is stored as it always was, so an older
+    // checkpoint of it still hits
+    val plain = new ResultCache(maxSize = 2)
+    plain.put("tweet", Seq("kw" -> "white house|casa", "ht" -> "a,b"), df(1))
+    val path = tmpDir("cachekeys") + "/state"
+    plain.checkpoint(spark, path)
+    assert(plain.checkpointedKeys(spark, path) === Seq("tweet|ht=a,b&kw=white house|casa"))
+  }
+
   test("LRU evicts the least-recently-used entry at capacity") {
     val cache = new ResultCache(maxSize = 2)
     cache.put("t", Seq("k" -> "1"), df(1))
@@ -184,35 +201,6 @@ class ResultCacheSpec extends SparkSpec {
       assert(cache.get("t", Seq("k" -> "boom")).isEmpty, "a failed computation must not be cached")
       assert(cache.getOrElse("t", Seq("k" -> "boom"))(df(2)).size === 2)
     } finally pool.shutdownNow()
-  }
-
-  /** Spark jobs started while `body` runs. A sentinel job marks the end:
-    * its start event arrives after every earlier one on the listener bus.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val Sentinel = "resultcachespec.sentinel"
-    val started = new AtomicInteger()
-    val drained = new AtomicBoolean()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Sentinel) != null)) drained.set(true)
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty(Sentinel, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Sentinel, null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!drained.get()) {
-        assert(System.currentTimeMillis() < deadline, "listener bus did not drain")
-        Thread.sleep(2)
-      }
-      started.get()
-    } finally sc.removeSparkListener(listener)
   }
 
   test("checkpoint and restore run as many Spark jobs for 12 entries as for 2") {

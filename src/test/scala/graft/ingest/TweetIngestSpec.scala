@@ -92,6 +92,8 @@ class TweetIngestSpec extends SparkSpec {
     // erin(quoted author), frank, heidi(rt3 author), ivan(retweeted
     // author), grace(author of the quote nested INSIDE retweet 2003)
     assert(us.count() === 9)
+    // ids are unique: Engine's once-per-Engine author join relies on it
+    assert(us.select("id").distinct().count() === us.count())
     val alice = us.filter(us("id") === "501").collect().head
     assert(alice.getAs[String]("screen_name") === "sn_alice")
     val ts = alice.getAs[java.sql.Timestamp]("created_at")

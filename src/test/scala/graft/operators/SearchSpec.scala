@@ -16,6 +16,34 @@ class SearchSpec extends SparkSpec {
     val got = tweets.filter(Predicates.keywordMatch("house"))
       .select("id_str").collect().map(_.getString(0)).sorted
     assert(got === Array("2", "5")) // 'house' and 'House'
+
+    // the native match answers exactly what RLIKE '(?i)kw' answers, null
+    // included, both in generated code and interpreted
+    import spark.implicits._
+    val texts = Seq(
+      "1" -> "the HOUSE is big", "2" -> "a horse, a hoUse", "3" -> "ho.se",
+      "4" -> "Ärger im Haus", "5" -> "ärger über 家 und ÄRGER", "6" -> null)
+      .toDF("id", "text").repartition(2) // not a local relation: runs as a scan
+    for {
+      kw <- Seq("house", "HoUsE", "ho.se", "ho\\.se", "ärger", "ÄRGER", "家", "^a ", "")
+      (factory, wholeStage) <- Seq(("CODEGEN_ONLY", "true"), ("NO_CODEGEN", "false"))
+    } {
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        def answers(c: org.apache.spark.sql.Column) = texts.select(col("id"), c)
+          .collect().map(r => r.getString(0) -> Option(r.get(1))).sortBy(_._1).toSeq
+        assert(answers(Predicates.keywordMatch(kw)) === answers(col("text").rlike("(?i)" + kw)),
+          s"keyword '$kw' under $factory")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    // a malformed pattern still fails the query
+    val e = intercept[Exception](texts.filter(Predicates.keywordMatch("(ho")).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.regex.PatternSyntaxException]), e.toString)
   }
 
   test("F2 hashtag membership is exact and case-sensitive") {
@@ -48,8 +76,11 @@ class SearchSpec extends SparkSpec {
     assert(got === Array("2", "1")) // rt 20 first, then rt 10
   }
 
-  test("searchWithAuthors broadcast-joins author columns") {
-    val got = TweetSearch.searchWithAuthors(tweets, users, keyword = Some("house"))
+  test("withAuthors left-joins author columns; search over it keeps them") {
+    val joined = TweetSearch.withAuthors(tweets, users)
+    assert(joined.columns.toSeq === tweets.columns.toSeq ++ TweetSearch.AuthorColumns)
+    assert(joined.count() === tweets.count())
+    val got = TweetSearch.search(joined, keyword = Some("house"))
       .select("id_str", "author_screen_name").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got === Map("2" -> "alice", "5" -> "bob"))
@@ -105,10 +136,12 @@ class SearchSpec extends SparkSpec {
   }
 
   test("J4 chain: screen_name → uid → tweets, ordered") {
-    val got = UserQueries.tweetsForUser(tweets, users, "bob")
+    val joined = TweetSearch.withAuthors(tweets, users)
+    assert(UserQueries.tweetsForUser(joined, "bob").columns.toSeq === tweets.columns.toSeq)
+    val got = UserQueries.tweetsForUser(joined, "bob")
       .select("id_str").collect().map(_.getString(0))
     assert(got === Array("3", "5")) // u2: rt 20 beats rt 3
-    val refined = UserQueries.tweetsForUser(tweets, users, "bob", keyword = Some("white"))
+    val refined = UserQueries.tweetsForUser(joined, "bob", keyword = Some("white"))
       .select("id_str").collect().map(_.getString(0))
     assert(refined === Array("5"))
   }
