@@ -33,8 +33,17 @@ import graft.sources.Warehouse
   */
 object IvfIndex {
 
+  /** The flat ([[Names]]) and quantized ([[PqNames]]) layouts. Both keep
+    * a coarse centroid table and postings partitioned by `centroid_id`,
+    * so one signature of [[delete]], [[compact]], [[health]] and
+    * [[tombstoneTable]] serves both.
+    */
+  sealed trait Layout extends Tombstones.Index { def centroids: String }
+
   /** Table-name pair for one persisted index. */
-  final case class Names(centroids: String, postings: String)
+  final case class Names(centroids: String, postings: String) extends Layout {
+    def tables: Seq[String] = Seq(centroids, postings)
+  }
 
   def names(prefix: String, fingerprint: String): Names =
     Names(s"${prefix}_cent_$fingerprint", s"${prefix}_post_$fingerprint")
@@ -71,7 +80,7 @@ object IvfIndex {
   /** Load the persisted model: k rows off the centroids table — the
     * bounded driver-side state every IVF search starts from.
     */
-  def loadCentroids(spark: SparkSession, n: Names): Array[Array[Double]] =
+  def loadCentroids(spark: SparkSession, n: Layout): Array[Array[Double]] =
     spark.table(n.centroids).orderBy("cid").select("c")
       .collect().map(_.getSeq[Double](0).toArray)
 
@@ -83,24 +92,22 @@ object IvfIndex {
     * Pass-through columns are derived from the POSTINGS schema (id +
     * vector + any payload columns the index was built with), so a
     * payload-built index (filtered search) grows exactly like a bare
-    * one — the batch just has to carry the same columns.
-    */
-  /** `assumeNoTombstoneOverlap = true` skips the per-batch tombstone
-    * overlap probe (one limit-1 job per appended batch): for callers
-    * whose batch ids are PROVABLY never tombstoned — the streaming
-    * drains, whose add/del id sets are disjoint by `require`d contract
-    * — the probe can never fire, so it is pure per-batch latency. The
-    * re-ingest-clears-tombstone rule still holds for every caller that
-    * leaves the flag at its default.
+    * one — the batch just has to carry the same columns. A re-ingested
+    * id clears its tombstone ([[Tombstones]]' re-ingest contract).
     */
   def appendBatch(spark: SparkSession, n: Names, batch: DataFrame,
-      idCol: String, vecCol: String,
-      centroids: Option[Array[Array[Double]]] = None,
-      assumeNoTombstoneOverlap: Boolean = false): Unit = {
-    // callers appending many batches against one model (the streaming
-    // drains) load the k-row model once and pass it in — per-batch
-    // reloads were ~20% of each micro-batch's cost
-    val cents = centroids.getOrElse(loadCentroids(spark, n))
+      idCol: String, vecCol: String): Unit = {
+    appendRows(spark, n, batch, idCol, vecCol, loadCentroids(spark, n))
+    Tombstones.clearReingested(spark, n, idCol, batch.select(col(idCol)))
+  }
+
+  /** [[appendBatch]]'s row append alone, against the given model: the
+    * streaming drains load the k-row model once (per-batch reloads were
+    * ~20% of each micro-batch's cost), and prove that no appended id is
+    * tombstoned, so they skip the tombstone clearing.
+    */
+  private[graft] def appendRows(spark: SparkSession, n: Names, batch: DataFrame,
+      idCol: String, vecCol: String, cents: Array[Array[Double]]): Unit = {
     val passCols = spark.table(n.postings).columns.filterNot(_ == "centroid_id")
     val missing = passCols.filterNot(batch.columns.contains)
     require(missing.isEmpty,
@@ -110,193 +117,44 @@ object IvfIndex {
       Ivf.assignAny(batch, idCol, vecCol, cents)
         .select((passCols :+ "centroid_id").map(col).toSeq: _*),
       n.postings)
-    // re-ingest clears a tombstone: the appended version IS the live row
-    // (a takedown blocks the old vector, never a future re-ingest — the
-    // pipeline_incremental ledger rule applied to the vector index).
-    // Rewrite only when some tombstone actually matches the batch: the
-    // overlap probe is one limit-1 job on the bounded tombstone table,
-    // the rewrite it usually skips is a checkpoint + drop + write +
-    // refresh per appended batch (measured ~0.3 s each in the drains,
-    // whose add/del sets are disjoint by construction).
-    val tombT = tombstoneTable(n)
-    if (!assumeNoTombstoneOverlap && spark.catalog.tableExists(tombT)) {
-      val batchIds = batch.select(col(idCol)).distinct()
-      val overlap = spark.table(tombT).join(batchIds, Seq(idCol), "left_semi")
-      if (!overlap.isEmpty) {
-        val remaining = spark.table(tombT)
-          .join(batchIds, Seq(idCol), "left_anti")
-          .localCheckpoint()
-        // in-place data rewrite: the table exists (the guard above), so
-        // skip writeTable's DROP + delete-location + CREATE churn
-        Warehouse.overwriteInto(remaining, tombT)
-      }
-    }
   }
 
   // --------------------------------------------------------------------
   // Deletion lifecycle: tombstones → filtered reads → compaction
   // --------------------------------------------------------------------
 
-  /** The index's tombstone side-table (created by the first [[delete]];
-    * absent on an index that never deleted — zero plan overhead until
-    * the feature is used). Keyed on the POSTINGS table, so the flat
-    * ([[Names]]) and quantized ([[PqNames]]) layouts share one
-    * lifecycle.
-    */
-  def tombstoneTable(postings: String): String = s"${postings}_tomb"
-  def tombstoneTable(n: Names): String = tombstoneTable(n.postings)
-  def tombstoneTable(n: PqNames): String = tombstoneTable(n.postings)
+  /** The index's tombstone side-table ([[Tombstones.table]]). */
+  def tombstoneTable(n: Layout): String = Tombstones.table(n)
 
   /** Delete vectors by id — the PII-takedown / dedup-drop reality of a
-    * curation pipeline: ids land in a bounded tombstone table (the
-    * delete-bitmap design every production index uses — a takedown
-    * list is driver-bounded by nature), every read path
-    * ([[search]] / [[searchBatch]] / [[stats]] / [[health]]) anti-joins
-    * it, and [[compact]] folds the tombstones into a physical rewrite
-    * of ONLY the affected partitions. Idempotent (distinct ids).
+    * curation pipeline: every read path ([[search]] / [[searchBatch]] /
+    * [[stats]] / [[health]] and the quantized searches) excludes them
+    * at once, and [[compact]] folds them into a physical rewrite of ONLY
+    * the affected cells ([[Tombstones]]). Idempotent (distinct ids).
     */
-  def delete(spark: SparkSession, n: Names, idCol: String, ids: Seq[Long]): Unit =
-    deleteFrom(spark, n.postings, idCol, ids)
-
-  /** [[delete]] for the quantized layout — same tombstone semantics. */
-  def delete(spark: SparkSession, n: PqNames, idCol: String, ids: Seq[Long]): Unit =
-    deleteFrom(spark, n.postings, idCol, ids)
-
-  /** [[delete]] when the caller GUARANTEES none of `ids` is already
-    * tombstoned (the streaming drains track their deleted ids driver-
-    * side — every takedown id arrives exactly once): skips the
-    * per-batch anti-join + checkpoint + emptiness probe that keeps the
-    * tombstone table an exact SET for default-path callers.
-    */
-  def deleteFresh(spark: SparkSession, n: Names, idCol: String,
-      ids: Seq[Long]): Unit =
-    deleteFrom(spark, n.postings, idCol, ids, assumeFresh = true)
-
-  /** [[deleteFresh]] for the quantized layout. */
-  def deleteFresh(spark: SparkSession, n: PqNames, idCol: String,
-      ids: Seq[Long]): Unit =
-    deleteFrom(spark, n.postings, idCol, ids, assumeFresh = true)
+  def delete(spark: SparkSession, n: Layout, idCol: String, ids: Seq[Long]): Unit =
+    Tombstones.delete(spark, n, idCol, ids)
 
   /** [[delete]] at DELTA scale — the takedown ids arrive as a DataFrame
     * (first column, cast to long) and NEVER transit the driver: the
     * form a nightly publish or bulk dedup-drop uses when the removed
-    * set is a corpus fraction, not a bounded takedown list (the
-    * [[graft.operators.TextIndex.delete]] DataFrame-face twin). A
-    * corpus-fraction delete should be followed by [[compact]] — the
-    * read paths broadcast the tombstones on the premise that they stay
+    * set is a corpus fraction. Follow it with [[compact]] — the read
+    * paths broadcast the tombstones on the premise that they stay
     * bounded between compactions. Idempotent (distinct ids).
     */
-  def delete(spark: SparkSession, n: Names, idCol: String, ids: DataFrame): Unit =
-    deleteFromDf(spark, n.postings, idCol, ids)
+  def delete(spark: SparkSession, n: Layout, idCol: String, ids: DataFrame): Unit =
+    Tombstones.delete(spark, n, idCol, ids)
 
-  /** DataFrame-face [[delete]] for the quantized layout. */
-  def delete(spark: SparkSession, n: PqNames, idCol: String, ids: DataFrame): Unit =
-    deleteFromDf(spark, n.postings, idCol, ids)
-
-  private def deleteFrom(spark: SparkSession, postings: String,
-      idCol: String, ids: Seq[Long], assumeFresh: Boolean = false): Unit = {
-    require(ids.nonEmpty, "delete needs at least one id")
-    import spark.implicits._
-    deleteFromDf(spark, postings, idCol, ids.toDF(idCol), assumeFresh)
-  }
-
-  /** `assumeFresh = true`: the caller GUARANTEES none of `ids` is
-    * already tombstoned (the streaming drains track the ids they have
-    * deleted driver-side — each takedown id arrives exactly once), so
-    * the per-batch anti-join + checkpoint + emptiness probe that keeps
-    * the table an exact SET is pure repeat latency and the new ids
-    * append directly. Default-path callers keep full idempotence.
+  /** Fold the tombstones into the code or vector postings: only the
+    * cells holding tombstoned rows are rewritten, emptied cells are
+    * dropped ([[Tombstones.compact]]). At 100 TB this is the nightly
+    * compaction: IO proportional to the affected cells, not the index.
     */
-  private def deleteFromDf(spark: SparkSession, postings: String,
-      idCol: String, ids: DataFrame, assumeFresh: Boolean = false): Unit = {
-    val tombT = tombstoneTable(postings)
-    val add = ids.select(col(ids.columns.head).cast("long").as(idCol)).distinct()
-    // APPEND only the genuinely new ids rather than read + union +
-    // distinct + rewrite (round-17 drain measurement: the rewrite was
-    // ~0.4 s per streamed delete — the extra cost is the table
-    // drop/create/refresh churn). The anti-join keeps the table an exact
-    // id SET (the documented idempotence contract); the checkpoint cuts
-    // lineage so the append never reads the table it inserts into; a
-    // fully-redundant delete skips the write outright.
-    if (spark.catalog.tableExists(tombT)) {
-      if (assumeFresh) Warehouse.appendInto(add, tombT)
-      else {
-        val fresh = add.join(spark.table(tombT), Seq(idCol), "left_anti")
-          .localCheckpoint()
-        if (!fresh.isEmpty) Warehouse.appendInto(fresh, tombT)
-      }
-    } else Warehouse.writeTable(add, tombT)
-  }
+  def compact(spark: SparkSession, n: Layout, idCol: String): Unit =
+    Tombstones.compact(spark, n, idCol, "centroid_id", Nil)
 
-  /** Anti-join the tombstones onto a frame carrying `idCol` — the
-    * read-path guard. The tombstone side is bounded and broadcasts; an
-    * index that never deleted pays nothing (no table, no join).
-    */
-  private def excludeTombstones(spark: SparkSession, postings: String,
-      idCol: String, df: DataFrame): DataFrame = {
-    val tombT = tombstoneTable(postings)
-    if (spark.catalog.tableExists(tombT))
-      df.join(broadcast(spark.table(tombT)), Seq(idCol), "left_anti")
-    else df
-  }
-
-  /** Fold the tombstones into the physical layout: rewrite ONLY the
-    * partitions that contain tombstoned rows (dynamic partition
-    * overwrite — untouched cells' files never move), drop any cell the
-    * deletes emptied entirely, then drop the tombstone table. At 100 TB
-    * this is the nightly compaction: IO proportional to the affected
-    * cells, not the index.
-    */
-  def compact(spark: SparkSession, n: Names, idCol: String): Unit =
-    compactPostings(spark, n.postings, idCol)
-
-  /** [[compact]] for the quantized layout — the code postings fold
-    * their tombstones exactly like the flat ones (same partition
-    * scheme, same dynamic-overwrite rewrite of only affected cells).
-    */
-  def compact(spark: SparkSession, n: PqNames, idCol: String): Unit =
-    compactPostings(spark, n.postings, idCol)
-
-  private def compactPostings(spark: SparkSession, postings: String,
-      idCol: String): Unit = {
-    val tombT = tombstoneTable(postings)
-    if (!spark.catalog.tableExists(tombT)) return
-    val tomb = broadcast(spark.table(tombT))
-    val post = spark.table(postings)
-    val affected = post.join(tomb, Seq(idCol), "left_semi")
-      .select(col("centroid_id")).distinct().collect().map(_.get(0))
-    if (affected.nonEmpty) {
-      // materialize the survivors BEFORE overwriting their own source
-      // partitions (a lazy plan would read files the write deletes)
-      val survivors = post
-        .filter(col("centroid_id").isInCollection(affected))
-        .join(tomb, Seq(idCol), "left_anti")
-        .localCheckpoint()
-      val keptCells = survivors.select(col("centroid_id"))
-        .distinct().collect().map(_.get(0)).toSet
-      // dynamic partition overwrite must be set on the SESSION for
-      // insertInto (the writer-level option is ignored on this path —
-      // static mode would truncate the whole table); scoped + restored
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prevMode = spark.conf.get(modeKey, "STATIC")
-      spark.conf.set(modeKey, "dynamic")
-      try survivors
-        .select(post.columns.map(col).toSeq: _*)
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite")
-        .insertInto(postings)
-      finally spark.conf.set(modeKey, prevMode)
-      // a cell whose EVERY row was tombstoned has no survivor rows, so
-      // dynamic overwrite never touches it — drop it explicitly or the
-      // deleted rows resurrect
-      affected.filterNot(keptCells).foreach { c =>
-        spark.sql(
-          s"ALTER TABLE $postings DROP IF EXISTS PARTITION (centroid_id=$c)")
-      }
-      spark.catalog.refreshTable(postings)
-    }
-    Warehouse.dropWithLocation(spark, tombT)
-  }
+  /** Cells for a build over `rows` vectors: max(8, ⌈rows/512⌉). */
+  private[graft] def cellsFor(rows: Long): Int = math.max(8L, (rows + 511) / 512).toInt
 
   /** ACT on [[health]]'s rebuild signal — the one sanctioned time to
     * pay Lloyd again: retrain the coarse quantizer on the LIVE rows
@@ -316,7 +174,7 @@ object IvfIndex {
     val payload = post.columns
       .filterNot(Set(idCol, vecCol, "centroid_id")).toSeq
     // materialize the live rows BEFORE build overwrites their source
-    val live = excludeTombstones(spark, n.postings, idCol,
+    val live = Tombstones.exclude(spark, n, idCol,
       post.select((Seq(idCol, vecCol) ++ payload).map(col): _*))
       .localCheckpoint()
     val liveCount = live.count()
@@ -328,11 +186,9 @@ object IvfIndex {
     require(liveCount > 0,
       s"rebuild of ${n.postings}: zero live rows (fully tombstoned) — " +
         "drop the index instead of retraining on an empty corpus")
-    val k = math.max(8L, (liveCount + 511) / 512).toInt
-    val cents = build(live, idCol, vecCol, n, k = k, iters = iters,
+    // build drops the tombstone table: the physical rows are gone
+    build(live, idCol, vecCol, n, k = cellsFor(liveCount), iters = iters,
       payloadCols = payload)
-    Warehouse.dropWithLocation(spark, tombstoneTable(n))
-    cents
   }
 
   /** [[rebuild]] for the QUANTIZED layout — closes the lifecycle
@@ -355,7 +211,7 @@ object IvfIndex {
       .filterNot(c => c == idCol || c == "centroid_id" || codeCols(c)).toSeq
     // materialize the live rows (id + payload from the postings, vector
     // from the source table) BEFORE buildPq overwrites their source
-    val live = excludeTombstones(spark, n.postings, idCol,
+    val live = Tombstones.exclude(spark, n, idCol,
       post.select((idCol +: payload).map(col): _*))
       .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
       .localCheckpoint()
@@ -363,10 +219,9 @@ object IvfIndex {
     require(liveCount > 0,
       s"rebuildPq of ${n.postings}: zero live rows (fully tombstoned) — " +
         "drop the index instead of retraining on an empty corpus")
-    val k = math.max(8L, (liveCount + 511) / 512).toInt
-    buildPq(live, idCol, vecCol, n, k = k, dim = dim, m = m, pqK = pqK,
-      iters = iters, payloadCols = payload)
-    Warehouse.dropWithLocation(spark, tombstoneTable(n))
+    // buildPq drops the tombstone table: the physical rows are gone
+    buildPq(live, idCol, vecCol, n, k = cellsFor(liveCount), dim = dim, m = m,
+      pqK = pqK, iters = iters, payloadCols = payload)
   }
 
   /** Index-health decision row — what [[stats]] observes, turned into
@@ -376,25 +231,10 @@ object IvfIndex {
     * the index or the hottest cell is ≥ 3× the mean. All-integer math
     * (truncating div), so the decision is hash-exact cross-engine.
     */
-  def health(spark: SparkSession, n: Names, idCol: String): DataFrame =
-    healthOf(spark, n.postings, idCol)
-
-  /** [[health]] for the quantized layout — the decision reads only the
-    * cell assignment and the tombstones, both of which the code
-    * postings carry exactly like the flat ones.
-    */
-  def health(spark: SparkSession, n: PqNames, idCol: String): DataFrame =
-    healthOf(spark, n.postings, idCol)
-
-  private def healthOf(spark: SparkSession, postings: String,
-      idCol: String): DataFrame = {
-    val post = spark.table(postings).select(col(idCol), col("centroid_id"))
-    val tombT = tombstoneTable(postings)
-    val tombstoned =
-      if (spark.catalog.tableExists(tombT))
-        post.join(broadcast(spark.table(tombT)), Seq(idCol), "left_semi")
-      else post.limit(0)
-    val cells = excludeTombstones(spark, postings, idCol, post)
+  def health(spark: SparkSession, n: Layout, idCol: String): DataFrame = {
+    val post = spark.table(n.postings).select(col(idCol), col("centroid_id"))
+    val tombstoned = Tombstones.only(spark, n, idCol, post)
+    val cells = Tombstones.exclude(spark, n, idCol, post)
       .groupBy("centroid_id").agg(count(lit(1)).as("nc"))
     cells
       .agg(count(lit(1)).cast("long").as("n_cells"),
@@ -440,7 +280,7 @@ object IvfIndex {
     val cents = loadCentroids(spark, n)
     val probed = Ivf.probeSet(q, cents, nprobe)
     val v = col(vecCol)
-    excludeTombstones(spark, n.postings, idCol, post
+    Tombstones.exclude(spark, n, idCol, post
       // the payload predicate rides the SAME pruned scan (pushed to the
       // posting files' row groups) — a filtered search costs the same
       // probe as an unfiltered one, never a side-table join per query
@@ -481,7 +321,7 @@ object IvfIndex {
     val v = col(vecCol)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("score").desc, col(idCol))
-    excludeTombstones(spark, n.postings, idCol,
+    Tombstones.exclude(spark, n, idCol,
         post.filter(col("centroid_id").isin(allCells: _*)))
       .join(probes,
         col("centroid_id") === col("__pcid") && col(idCol) =!= col("qid"))
@@ -501,6 +341,9 @@ object IvfIndex {
     * and code-only posting lists.
     */
   final case class PqNames(centroids: String, codebooks: String, postings: String)
+      extends Layout {
+    def tables: Seq[String] = Seq(centroids, codebooks, postings)
+  }
 
   def pqNames(prefix: String, fingerprint: String): PqNames =
     PqNames(s"${prefix}_cent_$fingerprint", s"${prefix}_book_$fingerprint",
@@ -565,14 +408,16 @@ object IvfIndex {
     * exactly like the flat [[appendBatch]].
     */
   def appendBatchPq(spark: SparkSession, n: PqNames, batch: DataFrame,
-      idCol: String, vecCol: String,
-      models: Option[(Array[Array[Double]], Array[Array[Array[Double]]])] = None,
-      assumeNoTombstoneOverlap: Boolean = false): Unit = {
-    // multi-batch callers (the streaming drains) load the bounded models
-    // once and pass them in — the flat appendBatch rationale
-    val (cents, books) = models.getOrElse(
-      (loadCentroids(spark, Names(n.centroids, n.postings)),
-        loadCodebooks(spark, n)))
+      idCol: String, vecCol: String): Unit = {
+    appendRowsPq(spark, n, batch, idCol, vecCol,
+      loadCentroids(spark, n), loadCodebooks(spark, n))
+    Tombstones.clearReingested(spark, n, idCol, batch.select(col(idCol)))
+  }
+
+  /** [[appendBatchPq]]'s row append alone — the flat [[appendRows]]. */
+  private[graft] def appendRowsPq(spark: SparkSession, n: PqNames,
+      batch: DataFrame, idCol: String, vecCol: String,
+      cents: Array[Array[Double]], books: Array[Array[Array[Double]]]): Unit = {
     // pass-through = postings schema minus the partition column (id +
     // codes + any payload the index was built with); codes come from
     // the encode below, the rest must ride in on the batch
@@ -586,21 +431,6 @@ object IvfIndex {
       Ivf.assignAny(Pq.encode(batch, vecCol, books), idCol, vecCol, cents)
         .select((passCols :+ "centroid_id").map(col).toSeq: _*),
       n.postings)
-    // rewrite only on actual overlap — the flat appendBatch rationale
-    // (and the probe skips entirely under the flat appendBatch's
-    // assumeNoTombstoneOverlap contract)
-    val tombT = tombstoneTable(n)
-    if (!assumeNoTombstoneOverlap && spark.catalog.tableExists(tombT)) {
-      val batchIds = batch.select(col(idCol)).distinct()
-      val overlap = spark.table(tombT).join(batchIds, Seq(idCol), "left_semi")
-      if (!overlap.isEmpty) {
-        val remaining = spark.table(tombT)
-          .join(batchIds, Seq(idCol), "left_anti")
-          .localCheckpoint()
-        // in-place data rewrite — the flat appendBatch rationale
-        Warehouse.overwriteInto(remaining, tombT)
-      }
-    }
   }
 
   /** Load the persisted PQ codebooks: m × pqK rows off the codebooks
@@ -630,10 +460,10 @@ object IvfIndex {
     val q = queryFrom.filter(col(idCol) === queryId)
       .select(Vectors.toDouble(col(vecCol)))
       .collect().head.getSeq[Double](0).toArray
-    val cents = loadCentroids(spark, Names(n.centroids, n.postings))
+    val cents = loadCentroids(spark, n)
     val books = loadCodebooks(spark, n)
     val probed = Ivf.probeSet(q, cents, nprobe)
-    val pool = excludeTombstones(spark, n.postings, idCol, spark.table(n.postings)
+    val pool = Tombstones.exclude(spark, n, idCol, spark.table(n.postings)
         .filter(col("centroid_id").isin(probed.toSeq: _*)
           && col(idCol) =!= queryId && payloadFilter))
       .select(col(idCol), col("centroid_id"),
@@ -670,7 +500,7 @@ object IvfIndex {
     val qs = queryFrom.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol), Vectors.toDouble(col(vecCol)))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val cents = loadCentroids(spark, Names(n.centroids, n.postings))
+    val cents = loadCentroids(spark, n)
     val books = loadCodebooks(spark, n)
     val m = books.length
     // per-query ADC dot tables (Pq.adcDotTables — the ONE definition of
@@ -694,7 +524,7 @@ object IvfIndex {
       .reduce(_ + _)
     val wPool = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("__as").desc, col(idCol))
-    val pool = excludeTombstones(spark, n.postings, idCol,
+    val pool = Tombstones.exclude(spark, n, idCol,
         spark.table(n.postings).filter(col("centroid_id").isin(allCells: _*)))
       .join(probes,
         col("centroid_id") === col("__pcid") && col(idCol) =!= col("qid"))
@@ -723,7 +553,7 @@ object IvfIndex {
     * partition stats more than data.
     */
   def stats(spark: SparkSession, n: Names, idCol: String): DataFrame =
-    excludeTombstones(spark, n.postings, idCol, spark.table(n.postings))
+    Tombstones.exclude(spark, n, idCol, spark.table(n.postings))
       .groupBy(col("centroid_id").cast("long").as("centroid_id"))
       .agg(count(lit(1)).as("n_vectors"),
         min(col(idCol)).as("min_id"), max(col(idCol)).as("max_id"))

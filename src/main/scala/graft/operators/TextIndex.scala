@@ -51,7 +51,9 @@ import graft.sources.Warehouse
 object TextIndex {
 
   /** Table-name pair for one persisted text index. */
-  final case class Names(postings: String, stats: String)
+  final case class Names(postings: String, stats: String) extends Tombstones.Index {
+    def tables: Seq[String] = Seq(postings, stats)
+  }
 
   def names(prefix: String, fingerprint: String): Names =
     Names(s"${prefix}_tpost_$fingerprint", s"${prefix}_tstat_$fingerprint")
@@ -133,10 +135,8 @@ object TextIndex {
       n.stats)
   }
 
-  /** Tombstone side-table (created by the first [[delete]]; absent on
-    * an index that never deleted — zero plan overhead until used).
-    */
-  def tombstoneTable(n: Names): String = s"${n.postings}_tomb"
+  /** Tombstone side-table ([[Tombstones.table]]). */
+  def tombstoneTable(n: Names): String = Tombstones.table(n)
 
   /** Grow the index WITHOUT rebuilding: the batch's (term, doc, tf, dl)
     * rows append into the bucket partitions and the 1-row stats fold in
@@ -148,17 +148,19 @@ object TextIndex {
     * would. PRECONDITION: batch ids must be new to the index (appending
     * an already-indexed doc doubles its postings — same contract as
     * [[IvfIndex.appendBatch]]). A re-ingested id clears its tombstone
-    * (the takedown blocks the old content, never a future re-ingest).
-    */
-  /** `assumeNoTombstoneOverlap = true` skips the per-batch tombstone
-    * overlap probe — the [[IvfIndex.appendBatch]] contract: for callers
-    * whose batch ids are provably never tombstoned (the streaming
-    * drains' disjoint add/del sets) the probe can never fire and is
-    * pure per-batch latency.
+    * ([[Tombstones]]' re-ingest contract).
     */
   def appendBatch(spark: SparkSession, n: Names, docs: DataFrame,
-      idCol: String, textCol: String,
-      assumeNoTombstoneOverlap: Boolean = false): Unit = {
+      idCol: String, textCol: String): Unit = {
+    appendRows(spark, n, docs, idCol, textCol)
+    Tombstones.clearReingested(spark, n, "doc_id", docs.select(col(idCol).as("doc_id")))
+  }
+
+  /** [[appendBatch]]'s row append and stats fold alone, for the
+    * streaming drain that proves no appended id is tombstoned.
+    */
+  private[graft] def appendRows(spark: SparkSession, n: Names, docs: DataFrame,
+      idCol: String, textCol: String): Unit = {
     val (rows0, dl) = postingRows(docs, idCol, textCol)
     // a payload-built index grows like a bare one — the batch just has
     // to carry the payload columns (the IvfIndex.appendBatch contract)
@@ -185,47 +187,17 @@ object TextIndex {
           (col("tot") + col("btot")).as("tot"))
         .localCheckpoint(),
       n.stats)
-    // re-ingest clears a tombstone — but rewrite the table only when a
-    // tombstone actually matches the batch (one limit-1 probe on the
-    // bounded table vs a checkpoint + rewrite per appended batch; the
-    // streaming drains' add/del sets are disjoint by construction, so
-    // they always skip — the IvfIndex.appendBatch rationale)
-    val tombT = tombstoneTable(n)
-    if (!assumeNoTombstoneOverlap && spark.catalog.tableExists(tombT)) {
-      val batchIds = docs.select(col(idCol).as("doc_id")).distinct()
-      val overlap = spark.table(tombT).join(batchIds, Seq("doc_id"), "left_semi")
-      if (!overlap.isEmpty)
-        Warehouse.overwriteInto(
-          spark.table(tombT)
-            .join(batchIds, Seq("doc_id"), "left_anti")
-            .localCheckpoint(),
-          tombT)
-    }
   }
 
-  /** Delete documents by id — the takedown path: ids land in a bounded
-    * tombstone table that [[bm25]] anti-joins AFTER the df aggregation,
-    * so a tombstoned doc stops RANKING immediately while the corpus
-    * statistics (df, n, tot) drift until [[compact]] refreshes them —
-    * the same block-now/fold-later semantics as the vector index's
-    * tombstones-until-rebuild. Idempotent (distinct ids).
+  /** Delete documents by id — the takedown path: ids land in the
+    * tombstone table that [[bm25]] and [[phrase]] anti-join AFTER the
+    * df aggregation, so a tombstoned doc stops RANKING immediately while
+    * the corpus statistics (df, n, tot) drift until [[compact]]
+    * refreshes them — the same block-now/fold-later semantics as the
+    * vector index's tombstones. Idempotent (distinct ids).
     */
-  def delete(spark: SparkSession, n: Names, ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "delete needs at least one id")
-    import spark.implicits._
-    delete(spark, n, ids.toDF("doc_id"))
-  }
-
-  /** [[delete]] when the caller GUARANTEES none of `ids` is already
-    * tombstoned (the streaming drains track their deleted ids driver-
-    * side): skips the per-batch anti-join + checkpoint + emptiness
-    * probe — [[IvfIndex.deleteFresh]]'s contract.
-    */
-  def deleteFresh(spark: SparkSession, n: Names, ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "delete needs at least one id")
-    import spark.implicits._
-    delete(spark, n, ids.toDF("doc_id"), assumeFresh = true)
-  }
+  def delete(spark: SparkSession, n: Names, ids: Seq[Long]): Unit =
+    Tombstones.delete(spark, n, "doc_id", ids)
 
   /** [[delete]] at DELTA scale: the takedown ids arrive as a DataFrame
     * (first column, cast to long) and never pass through the driver —
@@ -233,84 +205,32 @@ object TextIndex {
     * corpus fraction, not a bounded takedown list. Idempotent; an
     * empty delta is a no-op night.
     */
-  def delete(spark: SparkSession, n: Names, ids: DataFrame,
-      assumeFresh: Boolean = false): Unit = {
-    val tombT = tombstoneTable(n)
-    val add = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-    // APPEND only the genuinely new ids rather than read + union +
-    // distinct + rewrite (the IvfIndex.deleteFromDf rationale): the
-    // anti-join keeps the table an exact id SET, the checkpoint cuts
-    // lineage so the append never reads the table it inserts into, and
-    // a fully-redundant delete skips the write outright. `assumeFresh`:
-    // the caller guarantees none of `ids` is already tombstoned (the
-    // drains track deleted ids driver-side), so the anti-join +
-    // checkpoint + emptiness probe is skipped — IvfIndex.deleteFromDf's
-    // contract.
-    if (spark.catalog.tableExists(tombT)) {
-      if (assumeFresh) Warehouse.appendInto(add, tombT)
-      else {
-        val fresh = add.join(spark.table(tombT), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        if (!fresh.isEmpty) Warehouse.appendInto(fresh, tombT)
-      }
-    } else Warehouse.writeTable(add, tombT)
-  }
+  def delete(spark: SparkSession, n: Names, ids: DataFrame): Unit =
+    Tombstones.delete(spark, n, "doc_id", ids)
 
-  /** Fold the tombstones into the physical layout: rewrite ONLY the
-    * bucket partitions containing tombstoned rows (dynamic partition
-    * overwrite — untouched buckets' files never move), drop any bucket
-    * the deletes emptied, refresh the stats by the deleted docs'
-    * (doc, token) deltas, and drop the tombstone table. After
-    * compaction the index serves EXACTLY the BM25 of the corpus minus
-    * the deleted docs — df and length normalization included (the
-    * statistics drift [[delete]] documents is repaid here).
+  /** Fold the tombstones into the physical layout: the bucket
+    * partitions holding tombstoned rows are rewritten term-clustered,
+    * emptied buckets dropped ([[Tombstones.compact]]), and the stats
+    * shrink by the deleted docs' (doc, token) volume. After compaction
+    * the index serves EXACTLY the BM25 of the corpus minus the deleted
+    * docs — df and length normalization included (the statistics drift
+    * [[delete]] documents is repaid here).
     */
-  def compact(spark: SparkSession, n: Names): Unit = {
-    val tombT = tombstoneTable(n)
-    if (!spark.catalog.tableExists(tombT)) return
-    val tomb = broadcast(spark.table(tombT))
-    val post = spark.table(n.postings)
-    // stats deltas BEFORE the rewrite (the tombstoned rows carry dl)
-    val del = post.join(tomb, Seq("doc_id"), "left_semi")
-      .select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("dn"), coalesce(sum("dl"), lit(0L)).as("dtot"))
-      .localCheckpoint()
-    val affected = post.join(tomb, Seq("doc_id"), "left_semi")
-      .select(col("bucket")).distinct().collect().map(_.get(0))
-    if (affected.nonEmpty) {
-      // materialize survivors BEFORE overwriting their source partitions
-      val survivors = post
-        .filter(col("bucket").isInCollection(affected))
-        .join(tomb, Seq("doc_id"), "left_anti")
+  def compact(spark: SparkSession, n: Names): Unit =
+    if (spark.catalog.tableExists(tombstoneTable(n))) {
+      // stats deltas BEFORE the rewrite (the tombstoned rows carry dl)
+      val del = Tombstones.only(spark, n, "doc_id", spark.table(n.postings))
+        .select("doc_id", "dl").distinct()
+        .agg(count(lit(1)).as("dn"), coalesce(sum("dl"), lit(0L)).as("dtot"))
         .localCheckpoint()
-      val keptBuckets = survivors.select(col("bucket"))
-        .distinct().collect().map(_.get(0)).toSet
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prevMode = spark.conf.get(modeKey, "STATIC")
-      spark.conf.set(modeKey, "dynamic")
-      try survivors
-        .select(post.columns.map(col).toSeq: _*)
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("term"), col("doc_id"))
-        .write.mode("overwrite")
-        .insertInto(n.postings)
-      finally spark.conf.set(modeKey, prevMode)
-      // a fully-emptied bucket has no survivor rows — dynamic overwrite
-      // never touches it, so drop it or the deleted rows resurrect
-      affected.filterNot(keptBuckets).foreach { b =>
-        spark.sql(
-          s"ALTER TABLE ${n.postings} DROP IF EXISTS PARTITION (bucket=$b)")
-      }
-      spark.catalog.refreshTable(n.postings)
+      Tombstones.compact(spark, n, "doc_id", "bucket", Seq("term", "doc_id"))
+      Warehouse.overwriteInto(
+        spark.table(n.stats).crossJoin(del)
+          .select((col("n") - col("dn")).as("n"),
+            (col("tot") - col("dtot")).as("tot"))
+          .localCheckpoint(),
+        n.stats)
     }
-    Warehouse.overwriteInto(
-      spark.table(n.stats).crossJoin(del)
-        .select((col("n") - col("dn")).as("n"),
-          (col("tot") - col("dtot")).as("tot"))
-        .localCheckpoint(),
-      n.stats)
-    Warehouse.dropWithLocation(spark, tombT)
-  }
 
   /** Positional phrase query served ENTIRELY from the persisted index —
     * the quoted-query consumer ([[Postings.phraseMatches]] semantics)
@@ -324,13 +244,8 @@ object TextIndex {
     require(words.nonEmpty, "phrase must have at least one word")
     val ph = words.map(_.toLowerCase(java.util.Locale.ROOT))
     val bks = ph.distinct.map(bucketOf)
-    val slice0 = spark.table(n.postings)
-      .filter(col("bucket").isin(bks: _*) && col("term").isin(ph.distinct: _*))
-    val tombT = tombstoneTable(n)
-    val slice =
-      if (spark.catalog.tableExists(tombT))
-        slice0.join(broadcast(spark.table(tombT)), Seq("doc_id"), "left_anti")
-      else slice0
+    val slice = Tombstones.exclude(spark, n, "doc_id", spark.table(n.postings)
+      .filter(col("bucket").isin(bks: _*) && col("term").isin(ph.distinct: _*)))
     val tok = slice
       .select(col("doc_id"), col("term"),
         explode(split(col("pos_list"), "\\|")).as("pos_s"))
@@ -381,13 +296,9 @@ object TextIndex {
     // ranking exclusions (query-doc slot, tombstones) apply AFTER the
     // df aggregation: blocked docs stop ranking immediately, the corpus
     // statistics drift until compact() folds them (see [[delete]])
-    val afterExcl = excludeId.fold(slice0)(id => slice0.filter(col("doc_id") =!= id))
-      .filter(payloadFilter)
-    val tombT = tombstoneTable(n)
-    val slice =
-      if (spark.catalog.tableExists(tombT))
-        afterExcl.join(broadcast(spark.table(tombT)), Seq("doc_id"), "left_anti")
-      else afterExcl
+    val slice = Tombstones.exclude(spark, n, "doc_id",
+      excludeId.fold(slice0)(id => slice0.filter(col("doc_id") =!= id))
+        .filter(payloadFilter))
     val stats = spark.table(n.stats)
     slice.join(broadcast(dfq), "term")
       .crossJoin(broadcast(stats))

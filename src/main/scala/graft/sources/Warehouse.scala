@@ -75,7 +75,7 @@ object Warehouse {
     * insert its own partition-only sort — an UNSTABLE sort that
     * scrambles the clustering this method just paid for.
     */
-  private def sorted(df: DataFrame, partCols: Seq[String],
+  private[graft] def sorted(df: DataFrame, partCols: Seq[String],
       sortCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     if (sortCols.isEmpty) df

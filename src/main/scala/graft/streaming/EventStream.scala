@@ -367,25 +367,19 @@ object EventStream {
     } finally graft.util.Paths.deleteRecursively(base)
   }
 
-  /** Waits for an AvailableNow query to fully drain, FAILING LOUDLY on
-    * timeout: silently stopping a half-drained query and reading its sink
-    * would return a plausible-but-wrong partial result — a correctness
-    * check must error instead.
-    */
   /** Streaming INDEX MAINTENANCE drain — the nightly vector ingest as a
     * Structured Streaming job: the persisted IVF index
     * ([[graft.operators.IvfIndex]]) is built once on the pre-boundary
     * slice, then every micro-batch of new vectors flows through
-    * `foreachBatch` → [[graft.operators.IvfIndex.appendBatch]] (assign
-    * to the EXISTING centroids, append into the posting partitions —
-    * zero Lloyd rounds per batch). Returns the post-ingest per-cell
-    * stats, which a batch oracle computes as the stale-model assignment
-    * of the full corpus — the same ledger the `sim_index_incremental`
-    * family verifies, here maintained BY A STREAM. The feed is parquet
-    * (exact float round-trip — a JSONL feed could perturb vector bits),
-    * one file per micro-batch; index tables are invocation-unique and
-    * dropped after the stats materialize, so repeat invocations never
-    * double-append.
+    * `foreachBatch` → [[graft.operators.IvfIndex.appendBatch]]'s row
+    * append (assign to the EXISTING centroids, append into the posting
+    * partitions — zero Lloyd rounds per batch). Returns the post-ingest
+    * per-cell stats, which a batch oracle computes as the stale-model
+    * assignment of the full corpus — the same ledger the
+    * `sim_index_incremental` family verifies, here maintained BY A
+    * STREAM. The feed is parquet ([[drainParquetFeed]]); index tables
+    * are invocation-unique and dropped after the stats materialize, so
+    * repeat invocations never double-append.
     */
   def drainIndexIngest(spark: SparkSession, emb: DataFrame,
       idCol: String, vecCol: String, splitId: Long,
@@ -396,27 +390,18 @@ object EventStream {
     val n = IvfIndex.names(s"ivst$sfx", "stream")
     try {
       val old = emb.filter(col(idCol) < splitId)
-      val k = math.max(8L, (old.count() + 511) / 512).toInt
       // build returns the model; every micro-batch appends against it —
       // pass it through rather than re-reading the model table per batch
-      val cents = IvfIndex.build(old, idCol, vecCol, n, k = k)
-      val newRows = emb.filter(col(idCol) >= splitId).select(col(idCol), col(vecCol))
-      val feed = base.resolve("feed").toString
-      newRows.repartition(nFiles).write.mode("overwrite").parquet(feed)
-      val stream = spark.readStream.schema(newRows.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          IvfIndex.appendBatch(spark, n, batch, idCol, vecCol, Some(cents))
-        }
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
+      val cents = IvfIndex.build(old, idCol, vecCol, n, k = IvfIndex.cellsFor(old.count()))
+      // a fresh index has no tombstones to clear
+      drainParquetFeed(spark,
+          emb.filter(col(idCol) >= splitId).select(col(idCol), col(vecCol)),
+          base, nFiles) {
+        IvfIndex.appendRows(spark, n, _, idCol, vecCol, cents)
+      }
       IvfIndex.stats(spark, n, idCol).localCheckpoint()
     } finally {
-      graft.sources.Warehouse.dropWithLocation(spark, n.centroids)
-      graft.sources.Warehouse.dropWithLocation(spark, n.postings)
+      graft.operators.Tombstones.drop(spark, n)
       graft.util.Paths.deleteRecursively(base)
     }
   }
@@ -435,8 +420,7 @@ object EventStream {
     * index), so the drained union is bit-identical to one batch search
     * over the full query set — which is exactly what the oracle
     * computes. The index is NEVER mutated by serving, so callers pass a
-    * shared build-once index ([[graft.operators.IvfIndex.Names]]);
-    * parquet feed for exact float round-trip, one file per micro-batch.
+    * shared build-once index ([[graft.operators.IvfIndex.Names]]).
     */
   def drainIndexSearch(spark: SparkSession,
       n: graft.operators.IvfIndex.Names, queries: DataFrame,
@@ -445,27 +429,18 @@ object EventStream {
     import graft.operators.IvfIndex
     val base = java.nio.file.Files.createTempDirectory("graft_ivsv_")
     try {
-      val feed = base.resolve("feed").toString
       val out = base.resolve("out").toString
       val qrows = queries.select(col(idCol), col(vecCol))
-      qrows.repartition(nFiles).write.mode("overwrite").parquet(feed)
-      val stream = spark.readStream.schema(qrows.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // the request batch IS the query source: ids + vectors ride
-          // in. EMPTY batches write too (searchBatch handles an empty
-          // id list) — a no-rows micro-batch must still materialize the
-          // sink so the post-drain read never hits PATH_NOT_FOUND.
-          val qids = batch.select(col(idCol)).collect().map(_.getLong(0)).toSeq
-          IvfIndex.searchBatch(spark, n, idCol, vecCol, qids,
-              k = k, nprobe = nprobe, queryFrom = Some(batch))
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
+      drainParquetFeed(spark, qrows, base, nFiles) { batch =>
+        // the request batch IS the query source: ids + vectors ride
+        // in. EMPTY batches write too (searchBatch handles an empty
+        // id list) — a no-rows micro-batch must still materialize the
+        // sink so the post-drain read never hits PATH_NOT_FOUND.
+        val qids = batch.select(col(idCol)).collect().map(_.getLong(0)).toSeq
+        IvfIndex.searchBatch(spark, n, idCol, vecCol, qids,
+            k = k, nprobe = nprobe, queryFrom = Some(batch))
+          .write.mode("append").parquet(out)
+      }
       // an entirely-empty queries input produces ZERO feed files → zero
       // micro-batches → no sink directory at all: return the contract
       // schema empty rather than throwing path-not-found
@@ -479,84 +454,27 @@ object EventStream {
     * streaming symmetry (ingest: [[drainIndexIngest]], serving:
     * [[drainIndexSearch]]; this adds DELETES): the persisted IVF index
     * is built on the pre-boundary slice, then ONE maintenance stream
-    * carries both ingest rows (`op = add` — new vectors, assigned to
-    * the existing centroids) and takedown events (`op = del` — the PII
-    * removal that is most naturally a stream), interleaved within and
-    * across micro-batches; `foreachBatch` routes each batch's adds
-    * through [[graft.operators.IvfIndex.appendBatch]] and its delete
-    * ids through [[graft.operators.IvfIndex.delete]]. Determinism under
-    * the file source's batch ordering: the add set (ids ≥ `splitId`)
-    * and the delete set (`deleteIds`, pre-boundary ids) are DISJOINT,
-    * so appends and tombstones commute and any interleaving converges
-    * to the same final state — postings = old ∪ new under the stale
-    * model, tombstones = exactly `deleteIds` — which is what the batch
-    * oracle computes closed-form. Returns the post-drain search
+    * ([[maintainDrain]]) carries both ingest rows (new vectors, assigned
+    * to the existing centroids) and takedown events (the PII removal
+    * that is most naturally a stream), interleaved within and across
+    * micro-batches. The converged state — postings = old ∪ new under
+    * the stale model, tombstones = exactly `deleteIds` — is what the
+    * batch oracle computes closed-form. Returns the post-drain search
     * (tombstoned ids excluded, top-k backfilled from live rows).
-    * Parquet feed (exact float round-trip); invocation-unique index
-    * tables, dropped after the result materializes.
     */
   def drainIndexMaintain(spark: SparkSession, emb: DataFrame,
       idCol: String, vecCol: String, splitId: Long, deleteIds: Seq[Long],
       queryId: Long, k: Int, nprobe: Int, nFiles: Int = 3): DataFrame = {
     import graft.operators.IvfIndex
-    require(deleteIds.forall(_ < splitId),
-      "delete set must be disjoint from the streamed ingest ids " +
-        "(>= splitId) — overlapping sets would make the final state " +
-        "depend on micro-batch order")
-    val base = java.nio.file.Files.createTempDirectory("graft_ivdl_")
-    val sfx = base.getFileName.toString.replace("graft_ivdl_", "")
-    val n = IvfIndex.names(s"ivdl$sfx", "stream")
-    try {
-      val old = emb.filter(col(idCol) < splitId)
-      val k0 = math.max(8L, (old.count() + 511) / 512).toInt
+    maintainDrain(spark, emb, idCol, vecCol, splitId, deleteIds, nFiles, "ivdl")(
+        IvfIndex.names(_, "stream")) { (n, old) =>
       // keep the built model for the per-batch appends (bounded k×dim
-      // driver state — the appendBatch re-read it per micro-batch)
-      val cents = IvfIndex.build(old, idCol, vecCol, n, k = k0)
-      // one maintenance stream: adds carry their vectors (the ingest
-      // shape), deletes are id events; repartition mixes both kinds
-      // into every feed file so batches genuinely interleave
-      val events = emb.filter(col(idCol) >= splitId)
-          .select(col(idCol), col(vecCol), lit("add").as("op"))
-        .unionByName(emb.filter(col(idCol).isInCollection(deleteIds))
-          .select(col(idCol), col(vecCol), lit("del").as("op")))
-      val feed = base.resolve("feed").toString
-      events.repartition(nFiles).write.mode("overwrite").parquet(feed)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      // the require'd add/del disjointness means no appended id can be
-      // tombstoned (skip the per-batch overlap probe), and the driver-
-      // side seen-set means every id handed to delete is new to the
-      // tombstone table (skip its per-batch anti-join + probe) — 2-3
-      // fixed-latency jobs per micro-batch gone
-      val seenDels = scala.collection.mutable.Set.empty[Long]
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // ONE driver-bounded routing pass per micro-batch — (op, id)
-          // only, never the vector payload — replaces the checkpoint +
-          // adds-emptiness probe + dels collect trio (3 fixed-latency
-          // jobs per batch; the payload re-read below is one tiny file)
-          val ops = batch.select(col("op"), col(idCol)).collect()
-          if (ops.exists(_.getString(0) == "add"))
-            IvfIndex.appendBatch(spark, n,
-              batch.filter(col("op") === "add").drop("op"), idCol, vecCol,
-              Some(cents), assumeNoTombstoneOverlap = true)
-          val ids = ops.filter(_.getString(0) == "del").map(_.getLong(1)).toSeq
-          val fresh = ids.filterNot(seenDels)
-          seenDels ++= fresh
-          if (fresh.nonEmpty) IvfIndex.deleteFresh(spark, n, idCol, fresh)
-        }
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
+      // driver state)
+      val cents = IvfIndex.build(old, idCol, vecCol, n, k = IvfIndex.cellsFor(old.count()))
+      IvfIndex.appendRows(spark, n, _, idCol, vecCol, cents)
+    } { n =>
       IvfIndex.search(spark, n, idCol, vecCol, queryId, k = k,
-        nprobe = nprobe, queryFrom = Some(emb)).localCheckpoint()
-    } finally {
-      graft.sources.Warehouse.dropWithLocation(spark, n.centroids)
-      graft.sources.Warehouse.dropWithLocation(spark, n.postings)
-      graft.sources.Warehouse.dropWithLocation(spark,
-        IvfIndex.tombstoneTable(n))
-      graft.util.Paths.deleteRecursively(base)
+        nprobe = nprobe, queryFrom = Some(emb))
     }
   }
 
@@ -564,74 +482,116 @@ object EventStream {
     * stream against the index a 100 TB deployment actually serves:
     * built with [[graft.operators.IvfIndex.buildPq]] on the
     * pre-boundary slice (stale coarse + stale codebooks), ingest
-    * micro-batches encode through the PERSISTED codebooks
-    * ([[graft.operators.IvfIndex.appendBatchPq]] — zero Lloyd rounds
-    * per batch), takedown events tombstone by id, and the post-drain
-    * [[graft.operators.IvfIndex.searchPq]] must exclude every streamed
-    * takedown from its ADC pool and re-rank. Same disjointness rule as
-    * the flat drain (adds ≥ splitId, deletes below it) so any batch
-    * interleaving converges to the closed form the oracle computes.
+    * micro-batches encode through the PERSISTED codebooks (zero Lloyd
+    * rounds per batch), takedown events tombstone by id, and the
+    * post-drain [[graft.operators.IvfIndex.searchPq]] must exclude every
+    * streamed takedown from its ADC pool and re-rank.
     */
   def drainIndexMaintainPq(spark: SparkSession, emb: DataFrame,
       idCol: String, vecCol: String, splitId: Long, deleteIds: Seq[Long],
       queryId: Long, k: Int, nprobe: Int, poolFactor: Int,
       dim: Int, m: Int, pqK: Int, nFiles: Int = 3): DataFrame = {
-    import graft.operators.IvfIndex
+    import graft.operators.{Ivf, IvfIndex, Pq}
+    maintainDrain(spark, emb, idCol, vecCol, splitId, deleteIds, nFiles, "ivqd")(
+        IvfIndex.pqNames(_, "stream")) { (n, old) =>
+      val k0 = IvfIndex.cellsFor(old.count())
+      // train the two bounded models here and hand them to the build AND
+      // to every micro-batch append — the per-batch model-table re-reads
+      // (k-row coarse + m×pqK codebooks) were pure repeat cost
+      val cents = Ivf.train(old, idCol, vecCol, k = k0, iters = 2)
+      val books = Pq.train(old, idCol, vecCol, dim, m, pqK, 2)
+      IvfIndex.buildPq(old, idCol, vecCol, n, k = k0,
+        dim = dim, m = m, pqK = pqK,
+        coarseModel = Some(cents), books = Some(books))
+      IvfIndex.appendRowsPq(spark, n, _, idCol, vecCol, cents, books)
+    } { n =>
+      IvfIndex.searchPq(spark, n, idCol, vecCol, queryId, k = k,
+        nprobe = nprobe, poolFactor = poolFactor, queryFrom = emb)
+    }
+  }
+
+  /** TEXT-index maintenance as a micro-batch stream — the lexical twin
+    * of [[drainIndexMaintain]] ([[maintainDrain]]): the index builds on
+    * the pre-boundary docs (< `splitId`), then ONE stream interleaves
+    * ingest events (docs ≥ splitId, carrying their text) with takedown
+    * events (ids below the boundary). Appends are EXACT growth (df
+    * aggregates at query time, so unlike the vector layouts there is no
+    * stale-model drift to price), and the post-drain
+    * [[graft.operators.TextIndex.bm25]] must rank the full grown corpus
+    * minus every streamed takedown.
+    */
+  def drainTextMaintain(spark: SparkSession, docs: DataFrame,
+      idCol: String, textCol: String, splitId: Long, deleteIds: Seq[Long],
+      terms: Seq[String], limit: Int, nFiles: Int = 3): DataFrame = {
+    import graft.operators.TextIndex
+    // the text index keys its postings and tombstones on doc_id
+    maintainDrain(spark, docs.select(col(idCol).as("doc_id"), col(textCol)),
+        "doc_id", textCol, splitId, deleteIds, nFiles, "txdl")(
+        TextIndex.names(_, "stream")) { (n, old) =>
+      TextIndex.build(old, "doc_id", textCol, n)
+      TextIndex.appendRows(spark, n, _, "doc_id", textCol)
+    } { n => TextIndex.bm25(spark, n, terms, limit) }
+  }
+
+  /** The one add/takedown maintenance drain behind [[drainIndexMaintain]],
+    * [[drainIndexMaintainPq]] and [[drainTextMaintain]]. The layout
+    * supplies its names (from an invocation-unique prefix), its build
+    * on the rows below `splitId` (returning its row append, which holds
+    * the built models) and its post-drain query; this drain owns the
+    * rest. ONE parquet feed interleaves ingest events (rows ≥ `splitId`,
+    * op = add) with takedown events (`deleteIds`, op = del); each
+    * micro-batch collects its (op, id) pairs once — never the payload —
+    * then sends its adds to the row append and its new takedown ids to
+    * the tombstone table. Every table of the index is dropped after the
+    * query result materializes.
+    *
+    * PRECONDITIONS, both proved here, are why a micro-batch skips the
+    * public `appendBatch`/`delete` tombstone probes (2-3 fixed-latency
+    * jobs per batch):
+    *  - the add and takedown id sets are disjoint (`require`d: every
+    *    takedown is below `splitId`). No appended id is ever tombstoned,
+    *    so the row append need not clear tombstones; and appends and
+    *    tombstones commute, so any batch interleaving converges to the
+    *    closed form a batch oracle computes;
+    *  - each takedown id reaches the tombstone table once: the
+    *    driver-side seen-set passes on only ids not yet tombstoned, so
+    *    the blind [[graft.operators.Tombstones.appendFresh]] keeps the
+    *    table a set. The seen-set lives in the driver; a restarted drain
+    *    would lose it.
+    */
+  private def maintainDrain[N <: graft.operators.Tombstones.Index](
+      spark: SparkSession, rows: DataFrame, idCol: String, payloadCol: String,
+      splitId: Long, deleteIds: Seq[Long], nFiles: Int, prefix: String)(
+      names: String => N)(build: (N, DataFrame) => DataFrame => Unit)(
+      query: N => DataFrame): DataFrame = {
+    import graft.operators.Tombstones
     require(deleteIds.forall(_ < splitId),
       "delete set must be disjoint from the streamed ingest ids " +
         "(>= splitId) — overlapping sets would make the final state " +
         "depend on micro-batch order")
-    val base = java.nio.file.Files.createTempDirectory("graft_ivqd_")
-    val sfx = base.getFileName.toString.replace("graft_ivqd_", "")
-    val n = IvfIndex.pqNames(s"ivqd$sfx", "stream")
+    val base = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_")
+    val n = names(prefix + base.getFileName.toString.replace(s"graft_${prefix}_", ""))
     try {
-      val old = emb.filter(col(idCol) < splitId)
-      val k0 = math.max(8L, (old.count() + 511) / 512).toInt
-      // train the two bounded models here and hand them to the build AND
-      // to every micro-batch append — the per-batch model-table re-reads
-      // (k-row coarse + m×pqK codebooks) were pure repeat cost
-      val cents = graft.operators.Ivf.train(old, idCol, vecCol, k = k0, iters = 2)
-      val books = graft.operators.Pq.train(old, idCol, vecCol, dim, m, pqK, 2)
-      IvfIndex.buildPq(old, idCol, vecCol, n, k = k0,
-        dim = dim, m = m, pqK = pqK,
-        coarseModel = Some(cents), books = Some(books))
-      val events = emb.filter(col(idCol) >= splitId)
-          .select(col(idCol), col(vecCol), lit("add").as("op"))
-        .unionByName(emb.filter(col(idCol).isInCollection(deleteIds))
-          .select(col(idCol), col(vecCol), lit("del").as("op")))
-      val feed = base.resolve("feed").toString
-      events.repartition(nFiles).write.mode("overwrite").parquet(feed)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      // disjointness + driver-side seen-set skip the per-batch tombstone
-      // probes — the flat drain's rationale
+      val append = build(n, rows.filter(col(idCol) < splitId))
+      // adds carry their payload, takedowns are id events; the feed's
+      // repartition mixes both kinds into every file, so batches interleave
+      val events = rows.filter(col(idCol) >= splitId)
+          .select(col(idCol), col(payloadCol), lit("add").as("op"))
+        .unionByName(rows.filter(col(idCol).isInCollection(deleteIds))
+          .select(col(idCol), col(payloadCol), lit("del").as("op")))
       val seenDels = scala.collection.mutable.Set.empty[Long]
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // one driver-bounded routing pass — the flat drain's rationale
-          val ops = batch.select(col("op"), col(idCol)).collect()
-          if (ops.exists(_.getString(0) == "add"))
-            IvfIndex.appendBatchPq(spark, n,
-              batch.filter(col("op") === "add").drop("op"), idCol, vecCol,
-              Some((cents, books)), assumeNoTombstoneOverlap = true)
-          val ids = ops.filter(_.getString(0) == "del").map(_.getLong(1)).toSeq
-          val fresh = ids.filterNot(seenDels)
-          seenDels ++= fresh
-          if (fresh.nonEmpty) IvfIndex.deleteFresh(spark, n, idCol, fresh)
-        }
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-      IvfIndex.searchPq(spark, n, idCol, vecCol, queryId, k = k,
-        nprobe = nprobe, poolFactor = poolFactor, queryFrom = emb)
-        .localCheckpoint()
+      drainParquetFeed(spark, events, base, nFiles) { batch =>
+        val ops = batch.select(col("op"), col(idCol)).collect()
+        if (ops.exists(_.getString(0) == "add"))
+          append(batch.filter(col("op") === "add").drop("op"))
+        val fresh = ops.filter(_.getString(0) == "del").map(_.getLong(1)).toSeq
+          .filterNot(seenDels)
+        seenDels ++= fresh
+        if (fresh.nonEmpty) Tombstones.appendFresh(spark, n, idCol, fresh)
+      }
+      query(n).localCheckpoint()
     } finally {
-      graft.sources.Warehouse.dropWithLocation(spark, n.centroids)
-      graft.sources.Warehouse.dropWithLocation(spark, n.codebooks)
-      graft.sources.Warehouse.dropWithLocation(spark, n.postings)
-      graft.sources.Warehouse.dropWithLocation(spark,
-        IvfIndex.tombstoneTable(n))
+      Tombstones.drop(spark, n)
       graft.util.Paths.deleteRecursively(base)
     }
   }
@@ -644,97 +604,22 @@ object EventStream {
     * `quality_nb_persist` economics on a stream). Per-document scores
     * are independent of micro-batch boundaries, so the drained union
     * is bit-identical to one batch scoring pass — which is what the
-    * oracle computes. Parquet feed (exact text round-trip).
+    * oracle computes.
     */
-  /** TEXT-index maintenance as a micro-batch stream — the lexical twin
-    * of [[drainIndexMaintain]]: the index builds on the pre-boundary
-    * docs (< `splitId`), then ONE stream interleaves ingest events
-    * (docs ≥ splitId, carrying their text) with takedown events (ids
-    * below the boundary); each batch appends through
-    * [[graft.operators.TextIndex.appendBatch]] (EXACT growth — df
-    * aggregates at query time, so unlike the vector layouts there is
-    * no stale-model drift to price) or tombstones through
-    * [[graft.operators.TextIndex.delete]]. The post-drain
-    * [[graft.operators.TextIndex.bm25]] must rank the full grown corpus
-    * minus every streamed takedown. Disjoint add/del id sets keep
-    * batch order invisible (same rule as the vector drains), so the
-    * converged state has a closed form.
-    */
-  def drainTextMaintain(spark: SparkSession, docs: DataFrame,
-      idCol: String, textCol: String, splitId: Long, deleteIds: Seq[Long],
-      terms: Seq[String], limit: Int, nFiles: Int = 3): DataFrame = {
-    import graft.operators.TextIndex
-    require(deleteIds.forall(_ < splitId),
-      "delete set must be disjoint from the streamed ingest ids " +
-        "(>= splitId) — overlapping sets would make the final state " +
-        "depend on micro-batch order")
-    val base = java.nio.file.Files.createTempDirectory("graft_txdl_")
-    val sfx = base.getFileName.toString.replace("graft_txdl_", "")
-    val n = TextIndex.names(s"txdl$sfx", "stream")
-    try {
-      TextIndex.build(docs.filter(col(idCol) < splitId), idCol, textCol, n)
-      val events = docs.filter(col(idCol) >= splitId)
-          .select(col(idCol), col(textCol), lit("add").as("op"))
-        .unionByName(docs.filter(col(idCol).isInCollection(deleteIds))
-          .select(col(idCol), col(textCol), lit("del").as("op")))
-      val feed = base.resolve("feed").toString
-      events.repartition(nFiles).write.mode("overwrite").parquet(feed)
-      val stream = spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      // disjointness + driver-side seen-set skip the per-batch tombstone
-      // probes — the drainIndexMaintain rationale
-      val seenDels = scala.collection.mutable.Set.empty[Long]
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // one driver-bounded routing pass ((op, id) only, never the
-          // text payload) — the drainIndexMaintain rationale
-          val ops = batch.select(col("op"), col(idCol)).collect()
-          if (ops.exists(_.getString(0) == "add"))
-            TextIndex.appendBatch(spark, n,
-              batch.filter(col("op") === "add").drop("op"), idCol, textCol,
-              assumeNoTombstoneOverlap = true)
-          val ids = ops.filter(_.getString(0) == "del").map(_.getLong(1)).toSeq
-          val fresh = ids.filterNot(seenDels)
-          seenDels ++= fresh
-          if (fresh.nonEmpty) TextIndex.deleteFresh(spark, n, fresh)
-        }
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
-      TextIndex.bm25(spark, n, terms, limit).localCheckpoint()
-    } finally {
-      graft.sources.Warehouse.dropWithLocation(spark, n.postings)
-      graft.sources.Warehouse.dropWithLocation(spark, n.stats)
-      graft.sources.Warehouse.dropWithLocation(spark,
-        graft.operators.TextIndex.tombstoneTable(n))
-      graft.util.Paths.deleteRecursively(base)
-    }
-  }
-
   def drainNbScore(spark: SparkSession, docs: DataFrame,
       countsTable: String, scalarsTable: String,
       nFiles: Int = 3): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_nbsc_")
     try {
-      val feed = base.resolve("feed").toString
       val out = base.resolve("out").toString
       val rows = docs.select(col("doc_id"), col("text"))
-      rows.repartition(nFiles).write.mode("overwrite").parquet(feed)
-      val stream = spark.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val tok = batch.select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("w"))
-          graft.operators.NbClassifier
-            .score(tok, spark.table(countsTable), spark.table(scalarsTable))
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitDrained(q)
+      drainParquetFeed(spark, rows, base, nFiles) { batch =>
+        val tok = batch.select(col("doc_id"),
+          explode(split(lower(col("text")), " ")).as("w"))
+        graft.operators.NbClassifier
+          .score(tok, spark.table(countsTable), spark.table(scalarsTable))
+          .write.mode("append").parquet(out)
+      }
       // zero feed files (empty docs input) → zero batches → no sink dir:
       // return the scoring contract schema empty, not path-not-found
       readSinkOrEmpty(spark, out,
@@ -743,6 +628,25 @@ object EventStream {
             explode(split(lower(col("text")), " ")).as("w")),
           spark.table(countsTable), spark.table(scalarsTable)))
     } finally graft.util.Paths.deleteRecursively(base)
+  }
+
+  /** Stream `rows` through `onBatch`: write them as `nFiles` parquet feed
+    * files under `base`, read them back one file per micro-batch
+    * (`maxFilesPerTrigger` 1) into `foreachBatch`, and drain with
+    * AvailableNow. Parquet keeps vectors and text bit-exact through the
+    * feed, where a JSONL feed could perturb float bits.
+    */
+  private def drainParquetFeed(spark: SparkSession, rows: DataFrame,
+      base: java.nio.file.Path, nFiles: Int)(onBatch: DataFrame => Unit): Unit = {
+    val feed = base.resolve("feed").toString
+    rows.repartition(nFiles).write.mode("overwrite").parquet(feed)
+    awaitDrained(spark.readStream.schema(rows.schema)
+      .option("maxFilesPerTrigger", 1).parquet(feed)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
+      .option("checkpointLocation", base.resolve("ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .start())
   }
 
   /** Read a drain's parquet sink, or — when no micro-batch ever wrote
@@ -758,6 +662,11 @@ object EventStream {
           if e.getCondition == "PATH_NOT_FOUND" => contract.limit(0)
     }).localCheckpoint()
 
+  /** Waits for an AvailableNow query to fully drain, FAILING LOUDLY on
+    * timeout: silently stopping a half-drained query and reading its sink
+    * would return a plausible-but-wrong partial result — a correctness
+    * check must error instead.
+    */
   private def awaitDrained(q: org.apache.spark.sql.streaming.StreamingQuery,
       timeoutMs: Long = 300000): Unit = {
     val done = try q.awaitTermination(timeoutMs) finally q.stop()

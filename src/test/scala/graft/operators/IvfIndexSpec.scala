@@ -12,8 +12,14 @@ class IvfIndexSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private def emb = graft.Tables.embeddings(spark, sf)
 
+  /** Every index the suite builds; the last test drops them all. */
+  private val built = scala.collection.mutable.LinkedHashSet.empty[IvfIndex.Layout]
+  private def track[N <: IvfIndex.Layout](n: N): N = { built += n; n }
+  private def flat(fp: String) = track(IvfIndex.names("ivxspec", fp))
+  private def pq(fp: String) = track(IvfIndex.pqNames("ivxspec", fp))
+
   private lazy val builtNames = {
-    val n = IvfIndex.names("ivxspec", "t1")
+    val n = flat("t1")
     IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
     n
   }
@@ -37,7 +43,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendBatch grows the postings with the OLD model's assignment — no retrain") {
-    val n = IvfIndex.names("ivxspec", "t2")
+    val n = flat("t2")
     val old = emb.filter(col("vec_id") < 250)
     IvfIndex.build(old, "vec_id", "embedding", n, k = 8)
     IvfIndex.appendBatch(spark, n, emb.filter(col("vec_id") >= 250),
@@ -107,7 +113,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendBatch grows a payload-built index — payload columns ride the append") {
-    val n = IvfIndex.names("ivxspec", "t3")
+    val n = flat("t3")
     val old = emb.filter(col("vec_id") < 250)
     IvfIndex.build(old, "vec_id", "embedding", n, k = 8,
       payloadCols = Seq("label"))
@@ -129,7 +135,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("appendBatch rejects a batch missing the index's columns (clear error, no mangled append)") {
-    val n = IvfIndex.names("ivxspec", "t4")
+    val n = flat("t4")
     IvfIndex.build(emb.filter(col("vec_id") < 250), "vec_id", "embedding", n,
       k = 8, payloadCols = Seq("label"))
     val bare = emb.filter(col("vec_id") >= 250).select("vec_id", "embedding")
@@ -140,7 +146,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("quantized searchPq ≡ inline Pq.searchIvfPq on the same models (bit-identical ranking)") {
-    val n = IvfIndex.pqNames("ivxspec", "t5")
+    val n = pq("t5")
     IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
       m = 4, pqK = 4)
     val persisted = IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L,
@@ -164,7 +170,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("searchBatchPq ≡ per-query searchPq over the same quantized index") {
-    val n = IvfIndex.pqNames("ivxspec", "t10")
+    val n = pq("t10")
     IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
       m = 4, pqK = 4)
     val qids = Seq(0L, 1L, 2L)
@@ -181,7 +187,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("delete tombstones a ranking hit: search backfills, never resurrects") {
-    val n = IvfIndex.names("ivxspec", "t6")
+    val n = flat("t6")
     IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
     val before = IvfIndex.search(spark, n, "vec_id", "embedding", 0L,
       k = 10, nprobe = 2).select("vec_id").collect().map(_.getLong(0)).toSeq
@@ -203,52 +209,8 @@ class IvfIndexSpec extends SparkSpec {
     assert(!p.contains("HashAggregate") && p.contains("PartitionFilters"), p)
   }
 
-  test("DataFrame-face delete ≡ Seq-face delete (tombstone state and serving identical, both layouts)") {
-    // flat layout: same corpus, same takedown set, one per face
-    val ids = Seq(3L, 13L, 23L, 33L)
-    val nSeq = IvfIndex.names("ivxspec", "tdf_a")
-    val nDf = IvfIndex.names("ivxspec", "tdf_b")
-    IvfIndex.build(emb, "vec_id", "embedding", nSeq, k = 8)
-    IvfIndex.build(emb, "vec_id", "embedding", nDf, k = 8)
-    IvfIndex.delete(spark, nSeq, "vec_id", ids)
-    IvfIndex.delete(spark, nDf, "vec_id",
-      emb.filter(col("vec_id").isin(ids: _*)).select("vec_id"))
-    def tomb(n: IvfIndex.Names) =
-      spark.table(IvfIndex.tombstoneTable(n))
-        .collect().map(_.getLong(0)).sorted.toSeq
-    assert(tomb(nSeq) === tomb(nDf))
-    assert(tomb(nDf) === ids.sorted)
-    def top(n: IvfIndex.Names) =
-      IvfIndex.search(spark, n, "vec_id", "embedding", 0L, k = 10,
-        nprobe = 2).select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(top(nSeq) === top(nDf))
-    // the DataFrame face dedups and idempotes like the Seq face
-    IvfIndex.delete(spark, nDf, "vec_id",
-      emb.filter(col("vec_id").isin(ids: _*)).select("vec_id"))
-    assert(tomb(nDf) === ids.sorted)
-    // quantized layout parity
-    val qSeq = IvfIndex.pqNames("ivxspec", "tdf_qa")
-    val qDf = IvfIndex.pqNames("ivxspec", "tdf_qb")
-    IvfIndex.buildPq(emb, "vec_id", "embedding", qSeq, k = 8,
-      dim = 64, m = 4, pqK = 4)
-    IvfIndex.buildPq(emb, "vec_id", "embedding", qDf, k = 8,
-      dim = 64, m = 4, pqK = 4)
-    IvfIndex.delete(spark, qSeq, "vec_id", ids)
-    IvfIndex.delete(spark, qDf, "vec_id",
-      emb.filter(col("vec_id").isin(ids: _*)).select("vec_id"))
-    def qtomb(n: IvfIndex.PqNames) =
-      spark.table(IvfIndex.tombstoneTable(n))
-        .collect().map(_.getLong(0)).sorted.toSeq
-    assert(qtomb(qSeq) === qtomb(qDf))
-    def qtop(n: IvfIndex.PqNames) =
-      IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L, k = 10,
-        nprobe = 2, poolFactor = 4, queryFrom = emb)
-        .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(qtop(qSeq) === qtop(qDf))
-  }
-
-  test("re-ingest clears a tombstone (a takedown blocks the old row, never a future version)") {
-    val n = IvfIndex.names("ivxspec", "t7")
+  test("re-ingest clears the id's tombstone: its taken-down row serves again") {
+    val n = flat("t7")
     IvfIndex.build(emb.filter(col("vec_id") < 250), "vec_id", "embedding", n, k = 8)
     IvfIndex.delete(spark, n, "vec_id", Seq(7L, 9L))
     // 7 comes back in a new batch; 9 stays tombstoned
@@ -257,7 +219,9 @@ class IvfIndexSpec extends SparkSpec {
     val live = IvfIndex.stats(spark, n, "vec_id")
       .collect().map(_.getLong(1)).sum
     // 250 rows built - 2 deleted + 1 re-ingested duplicate of id 7, and
-    // id 7's BOTH physical rows are live again (tombstone cleared)
+    // id 7's BOTH physical rows are live again: tombstones are keyed by
+    // id, so clearing one unblocks the taken-down row too (compact
+    // before re-ingesting a taken-down id)
     val sevens = spark.table(n.postings).filter(col("vec_id") === 7).count()
     assert(sevens === 2)
     assert(live === 250 - 2 + 2)
@@ -267,7 +231,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("compact folds tombstones into the layout: affected partitions rewritten, emptied cells dropped") {
-    val n = IvfIndex.names("ivxspec", "t8")
+    val n = flat("t8")
     IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
     // empty one whole cell + delete one row of another
     val byCell = spark.table(n.postings).select("vec_id", "centroid_id")
@@ -293,7 +257,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("quantized compact parity: code postings fold tombstones exactly like flat ones") {
-    val n = IvfIndex.pqNames("ivxspec", "t11")
+    val n = pq("t11")
     IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
       m = 4, pqK = 4)
     val byCell = spark.table(n.postings).select("vec_id", "centroid_id")
@@ -317,7 +281,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("rebuild acts on the health signal: retrain on live rows, tombstones folded, decision clears") {
-    val n = IvfIndex.names("ivxspec", "t12")
+    val n = flat("t12")
     IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
     val takedown = emb.filter(col("vec_id") % 10 === 3)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
@@ -331,7 +295,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)))
     // the rebuilt index ≡ a fresh build on the live slice, search-for-search
     val live = emb.filter(col("vec_id") % 10 =!= 3)
-    val n2 = IvfIndex.names("ivxspec", "t13")
+    val n2 = flat("t13")
     IvfIndex.build(live, "vec_id", "embedding", n2,
       k = math.max(8L, (live.count() + 511) / 512).toInt)
     val rebuilt = IvfIndex.search(spark, n, "vec_id", "embedding", 0L,
@@ -344,7 +308,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("health turns stats into the rebuild decision (integer-exact)") {
-    val n = IvfIndex.names("ivxspec", "t9")
+    val n = flat("t9")
     IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
     val clean = IvfIndex.health(spark, n, "vec_id").collect().head
     assert(clean.getAs[Long]("n_tombstones") === 0L)
@@ -361,7 +325,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("quantized lifecycle parity: appendBatchPq grows retrain-free; delete excludes from searchPq") {
-    val n = IvfIndex.pqNames("ivxspec", "t10")
+    val n = pq("t10")
     val old = emb.filter(col("vec_id") < 250)
     IvfIndex.buildPq(old, "vec_id", "embedding", n, k = 8, dim = 64,
       m = 4, pqK = 4)
@@ -389,7 +353,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("rebuildPq acts on the signal: coarse + codebooks retrained on live rows ≡ fresh buildPq on the live slice") {
-    val n = IvfIndex.pqNames("ivxspec", "t15")
+    val n = pq("t15")
     IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
       m = 4, pqK = 4)
     val takedown = emb.filter(col("vec_id") % 10 === 3)
@@ -406,7 +370,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)))
     // rebuilt-PQ ≡ a fresh buildPq on the live slice, search-for-search
     val live = emb.filter(col("vec_id") % 10 =!= 3)
-    val n2 = IvfIndex.pqNames("ivxspec", "t16")
+    val n2 = pq("t16")
     IvfIndex.buildPq(live, "vec_id", "embedding", n2,
       k = math.max(8L, (live.count() + 511) / 512).toInt,
       dim = 64, m = 4, pqK = 4)
@@ -421,7 +385,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("rebuildPq carries payload columns through the retrain (filtered index rebuilds intact)") {
-    val n = IvfIndex.pqNames("ivxspec", "t17")
+    val n = pq("t17")
     IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
       m = 4, pqK = 4, payloadCols = Seq("label"))
     IvfIndex.delete(spark, n, "vec_id", Seq(3L, 13L, 23L))
@@ -436,7 +400,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("rebuildPq is idempotent: a second rebuild on the already-rebuilt index is a no-op") {
-    val n = IvfIndex.pqNames("ivxspec", "t18")
+    val n = pq("t18")
     IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
       m = 4, pqK = 4)
     IvfIndex.delete(spark, n, "vec_id", Seq(3L, 13L, 23L, 33L, 43L))
@@ -455,7 +419,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("rebuild of a fully-tombstoned index refuses loudly (drop decision, not an empty retrain)") {
-    val n = IvfIndex.names("ivxspec", "t14")
+    val n = flat("t14")
     val slice = emb.filter(col("vec_id") < 64)
     IvfIndex.build(slice, "vec_id", "embedding", n, k = 8)
     IvfIndex.delete(spark, n, "vec_id",
@@ -478,7 +442,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("health on a fully-tombstoned index flags rebuild emphatically, never nulls") {
-    val n = IvfIndex.names("ivxspec", "t11")
+    val n = flat("t11")
     val slice = emb.filter(col("vec_id") < 64)
     IvfIndex.build(slice, "vec_id", "embedding", n, k = 8)
     IvfIndex.delete(spark, n, "vec_id",
@@ -511,5 +475,12 @@ class IvfIndexSpec extends SparkSpec {
     // unprobed cells' files are never opened
     assert(p.contains("PartitionFilters"), p)
     assert(p.contains("centroid_id"), p)
+  }
+
+  test("the suite drops every index it built: no ivxspec_* table remains") {
+    built.foreach(Tombstones.drop(spark, _))
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("ivxspec_"))
+    assert(left.isEmpty, left.mkString(", "))
   }
 }

@@ -118,30 +118,6 @@ class TextIndexSpec extends SparkSpec {
       TextIndex.bm25(spark, names, terms, 25).collect().toSeq)
   }
 
-  test("delete blocks ranking immediately; re-ingest clears the tombstone") {
-    val docs = Tables.documents(spark, sf)
-    val n3 = TextIndex.names("titest_del", "spec")
-    TextIndex.build(docs, "doc_id", "text", n3)
-    val full = TextIndex.bm25(spark, n3, terms, 1000)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val victims = full.keys.toSeq.sorted.take(2)
-    TextIndex.delete(spark, n3, victims)
-    val after = TextIndex.bm25(spark, n3, terms, 1000)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    // victims gone, everyone else's score untouched (stats drift by
-    // design — the ranking exclusion is post-df)
-    assert(after === (full -- victims))
-    // re-ingesting one victim clears its tombstone: compact first would
-    // fold it, but a plain re-append must resurrect it
-    TextIndex.compact(spark, n3)
-    TextIndex.appendBatch(spark, n3,
-      docs.filter(col("doc_id") === victims.head), "doc_id", "text")
-    val back = TextIndex.bm25(spark, n3, terms, 1000)
-      .collect().map(_.getLong(0)).toSet
-    assert(back.contains(victims.head))
-    assert(!back.contains(victims(1)))
-  }
-
   test("compact folds tombstones: serving equals a fresh build on the filtered corpus") {
     val docs = Tables.documents(spark, sf)
     val n4 = TextIndex.names("titest_cmp", "spec")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.operators.{IvfIndex, TextIndex}
+import graft.operators.{IvfIndex, TextIndex, Tombstones}
 import graft.streaming.EventStream
 
 /** The EMPTY-INPUT contract, as a category: every `EventStream.drain*`
@@ -24,6 +24,10 @@ class DegenerateInputSpec extends SparkSpec {
     .select("doc_id", "text").localCheckpoint()
   private lazy val emb = Tables.embeddings(spark, sf)
     .filter(col("vec_id") < 60).localCheckpoint()
+
+  /** Every index the suite builds; the last test drops them all. */
+  private val built = scala.collection.mutable.LinkedHashSet.empty[Tombstones.Index]
+  private def track[N <: Tombstones.Index](n: N): N = { built += n; n }
 
   private def assertEmptyWithSchema(df: DataFrame, cols: Seq[String],
       hint: String): Unit = {
@@ -96,7 +100,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("serving drains: EMPTY query/score sets return contract schemas") {
-    val n = IvfIndex.names("degen_iv", "spec")
+    val n = track(IvfIndex.names("degen_iv", "spec"))
     if (!IvfIndex.exists(spark, n))
       IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
     assertEmptyWithSchema(
@@ -114,7 +118,7 @@ class DegenerateInputSpec extends SparkSpec {
   test("TextIndex lifecycle: empty corpus, absent-id takedown, no-tombstone compact") {
     val terms = Seq("join", "vector", "stream")
     // build on an EMPTY corpus: stats must be (0, 0), serving empty
-    val n0 = TextIndex.names("degen_t0", "spec")
+    val n0 = track(TextIndex.names("degen_t0", "spec"))
     TextIndex.build(docs.limit(0), "doc_id", "text", n0)
     val st = spark.table(n0.stats).collect().head
     assert((st.getLong(0), st.getLong(1)) === (0L, 0L))
@@ -127,7 +131,7 @@ class DegenerateInputSpec extends SparkSpec {
     TextIndex.compact(spark, n0)
     // takedown of ids the index never held: serving unchanged, compact
     // folds nothing, stats unchanged
-    val n1 = TextIndex.names("degen_t1", "spec")
+    val n1 = track(TextIndex.names("degen_t1", "spec"))
     TextIndex.build(docs.filter(col("doc_id") < 40), "doc_id", "text", n1)
     val before = TextIndex.bm25(spark, n1, terms, 100).collect().toSeq
     val stBefore = spark.table(n1.stats).collect().head.toSeq
@@ -146,7 +150,7 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("IvfIndex lifecycle: empty batch append, absent-id takedown, empty batch search") {
-    val n = IvfIndex.names("degen_iv2", "spec")
+    val n = track(IvfIndex.names("degen_iv2", "spec"))
     if (!IvfIndex.exists(spark, n))
       IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
     def top(k: Int) = IvfIndex
@@ -174,7 +178,7 @@ class DegenerateInputSpec extends SparkSpec {
         k = 3, nprobe = 2, queryFrom = Some(emb)),
       Seq("qid", "vec_id", "centroid_id", "score"), "searchBatch(Nil)")
     // quantized layout: empty batch append leaves serving untouched
-    val pn = IvfIndex.pqNames("degen_pq", "spec")
+    val pn = track(IvfIndex.pqNames("degen_pq", "spec"))
     if (!IvfIndex.pqExists(spark, pn))
       IvfIndex.buildPq(emb, "vec_id", "embedding", pn, k = 8,
         dim = 64, m = 4, pqK = 4)
@@ -206,7 +210,7 @@ class DegenerateInputSpec extends SparkSpec {
     // 'unchanged'; delete(∅) → compact → appendBatch(∅) must leave the
     // index byte-identical in serving terms (the publish chain's
     // build→delete→append ordering with nothing to do at each step)
-    val n1 = TextIndex.names("degen_p1", "spec")
+    val n1 = track(TextIndex.names("degen_p1", "spec"))
     TextIndex.build(base, "doc_id", "text", n1)
     val before = TextIndex.bm25(spark, n1, terms, 100).collect().toSeq
     val diff0 = Snapshot.diff(base, base, "doc_id", Seq("text"))
@@ -223,7 +227,7 @@ class DegenerateInputSpec extends SparkSpec {
     // 2) ALL-CHANGED night: every doc's content hash moves → delete
     // everything, compact folds the whole index away, append re-adds
     // the new content; serving must equal a FRESH build on the new snap
-    val n2 = TextIndex.names("degen_p2", "spec")
+    val n2 = track(TextIndex.names("degen_p2", "spec"))
     TextIndex.build(base, "doc_id", "text", n2)
     val newSnap = base.withColumn("text", concat(col("text"), lit(" v2")))
       .localCheckpoint()
@@ -236,7 +240,7 @@ class DegenerateInputSpec extends SparkSpec {
     TextIndex.appendBatch(spark, n2,
       newSnap.join(diff2.filter(col("status").isin("added", "changed")),
         Seq("doc_id"), "left_semi"), "doc_id", "text")
-    val nf = TextIndex.names("degen_p2f", "spec")
+    val nf = track(TextIndex.names("degen_p2f", "spec"))
     TextIndex.build(newSnap, "doc_id", "text", nf)
     assert(TextIndex.bm25(spark, n2, terms, 100).collect().toSeq ===
       TextIndex.bm25(spark, nf, terms, 100).collect().toSeq)
@@ -244,7 +248,7 @@ class DegenerateInputSpec extends SparkSpec {
       spark.table(nf.stats).collect().head.toSeq)
 
     // 3) EMPTY-CORPUS publish: both snapshots empty — every step no-ops
-    val n3 = TextIndex.names("degen_p3", "spec")
+    val n3 = track(TextIndex.names("degen_p3", "spec"))
     TextIndex.build(docs.limit(0), "doc_id", "text", n3)
     val diff3 = Snapshot.diff(docs.limit(0), docs.limit(0), "doc_id", Seq("text"))
       .select("doc_id", "status").localCheckpoint()
@@ -261,7 +265,7 @@ class DegenerateInputSpec extends SparkSpec {
     // 4) vector arm, empty-delta night: anti-join delta is empty, the
     // takedown frame is empty — append(∅) + delete(∅) + compact keep
     // the index serving its base state on BOTH layouts
-    val vn = IvfIndex.names("degen_pv", "spec")
+    val vn = track(IvfIndex.names("degen_pv", "spec"))
     if (!IvfIndex.exists(spark, vn))
       IvfIndex.build(emb, "vec_id", "embedding", vn, k = 8)
     val vBefore = IvfIndex.search(spark, vn, "vec_id", "embedding", 0L,
@@ -326,5 +330,12 @@ class DegenerateInputSpec extends SparkSpec {
     assert(one.size === 1)
     val exact = Layout.zIntervals(3, 12, 5, 9, maxIntervals = 100000)
     assert(one.head._1 === exact.head._1 && one.head._2 === exact.last._2)
+  }
+
+  test("the suite drops every index it built: no degen_* table remains") {
+    built.foreach(Tombstones.drop(spark, _))
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("degen_"))
+    assert(left.isEmpty, left.mkString(", "))
   }
 }

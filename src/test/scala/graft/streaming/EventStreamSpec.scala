@@ -316,10 +316,15 @@ class EventStreamSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val takedown = emb.filter(col("vec_id") % 10 === 3 && col("vec_id") < 250)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val streamed = EventStream.drainIndexMaintain(spark, emb,
-      "vec_id", "embedding", splitId = 250L, deleteIds = takedown,
-      queryId = 0L, k = 10, nprobe = 2, nFiles = 3)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
+    var streamed = Seq.empty[Long]
+    val jobs = jobsDuring {
+      streamed = EventStream.drainIndexMaintain(spark, emb,
+        "vec_id", "embedding", splitId = 250L, deleteIds = takedown,
+        queryId = 0L, k = 10, nprobe = 2, nFiles = 3)
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+    }
+    // 34 jobs before the three maintenance drains shared one
+    assert(jobs <= 34, s"drainIndexMaintain ran $jobs Spark jobs")
     // batch twin: build on the old slice, ONE append of the new slice,
     // ONE delete of the takedown set — micro-batch boundaries invisible
     val n = IvfIndex.names("ivxstream", "tb")
@@ -336,11 +341,7 @@ class EventStreamSpec extends SparkSpec {
       assert(streamed === batch)
       assert(streamed.intersect(takedown).isEmpty)
       assert(streamed.size === 10)
-    } finally {
-      graft.sources.Warehouse.dropWithLocation(spark, n.centroids)
-      graft.sources.Warehouse.dropWithLocation(spark, n.postings)
-      graft.sources.Warehouse.dropWithLocation(spark, IvfIndex.tombstoneTable(n))
-    }
+    } finally graft.operators.Tombstones.drop(spark, n)
   }
 
   test("streamed TEXT-index maintenance (ingest + takedown) equals the batch apply") {
@@ -350,10 +351,15 @@ class EventStreamSpec extends SparkSpec {
     val terms = Seq("join", "vector", "stream")
     val takedown = docs.filter(col("doc_id") % 10 === 3 && col("doc_id") < 250)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    val streamed = EventStream.drainTextMaintain(spark, docs,
-      "doc_id", "text", splitId = 250L, deleteIds = takedown,
-      terms = terms, limit = 1000, nFiles = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    var streamed = Seq.empty[(Long, Long, Long)]
+    val jobs = jobsDuring {
+      streamed = EventStream.drainTextMaintain(spark, docs,
+        "doc_id", "text", splitId = 250L, deleteIds = takedown,
+        terms = terms, limit = 1000, nFiles = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    }
+    // 58 jobs before the three maintenance drains shared one
+    assert(jobs <= 58, s"drainTextMaintain ran $jobs Spark jobs")
     // batch twin: build on the old slice, ONE append, ONE delete —
     // micro-batch boundaries invisible. And since text growth is EXACT,
     // the batch twin itself equals a full build + delete.
@@ -368,11 +374,7 @@ class EventStreamSpec extends SparkSpec {
       assert(streamed === batch)
       assert(streamed.map(_._1).intersect(takedown).isEmpty)
       assert(streamed.nonEmpty)
-    } finally {
-      graft.sources.Warehouse.dropWithLocation(spark, n.postings)
-      graft.sources.Warehouse.dropWithLocation(spark, n.stats)
-      graft.sources.Warehouse.dropWithLocation(spark, TextIndex.tombstoneTable(n))
-    }
+    } finally graft.operators.Tombstones.drop(spark, n)
   }
 
   test("streamed QUANTIZED maintenance (ingest + takedown) equals the batch apply") {
@@ -381,11 +383,16 @@ class EventStreamSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val takedown = emb.filter(col("vec_id") % 10 === 3 && col("vec_id") < 250)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val streamed = EventStream.drainIndexMaintainPq(spark, emb,
-      "vec_id", "embedding", splitId = 250L, deleteIds = takedown,
-      queryId = 0L, k = 10, nprobe = 2, poolFactor = 4,
-      dim = 64, m = 4, pqK = 4, nFiles = 3)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
+    var streamed = Seq.empty[Long]
+    val jobs = jobsDuring {
+      streamed = EventStream.drainIndexMaintainPq(spark, emb,
+        "vec_id", "embedding", splitId = 250L, deleteIds = takedown,
+        queryId = 0L, k = 10, nprobe = 2, poolFactor = 4,
+        dim = 64, m = 4, pqK = 4, nFiles = 3)
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+    }
+    // 59 jobs before the three maintenance drains shared one
+    assert(jobs <= 59, s"drainIndexMaintainPq ran $jobs Spark jobs")
     val n = IvfIndex.pqNames("ivxstream", "tq")
     try {
       val old = emb.filter(col("vec_id") < 250)
@@ -401,12 +408,7 @@ class EventStreamSpec extends SparkSpec {
       assert(streamed === batch)
       assert(streamed.intersect(takedown).isEmpty)
       assert(streamed.size === 10)
-    } finally {
-      graft.sources.Warehouse.dropWithLocation(spark, n.centroids)
-      graft.sources.Warehouse.dropWithLocation(spark, n.codebooks)
-      graft.sources.Warehouse.dropWithLocation(spark, n.postings)
-      graft.sources.Warehouse.dropWithLocation(spark, IvfIndex.tombstoneTable(n))
-    }
+    } finally graft.operators.Tombstones.drop(spark, n)
   }
 
   test("streamed NB scoring equals one batch scoring pass over the persisted model") {
