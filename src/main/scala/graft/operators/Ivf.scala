@@ -90,6 +90,14 @@ object Ivf {
       .select(col(idCol), col("__m.c").as("centroid_id"), col("__m.s").as("score"))
   }
 
+  /** Coarse cells for a model over `rows` vectors: max(8, ⌈rows/512⌉).
+    * Scaling k with the corpus keeps each cell near 512 vectors, so
+    * per-cell work (a probe, a SemDeDup within-cell join) stays constant
+    * as the corpus grows; at both verification scales it yields k = 8,
+    * and the oracle twins compute the same k from count(*).
+    */
+  def cellsFor(rows: Long): Int = math.max(8L, (rows + 511) / 512).toInt
+
   /** Fixed-point scale for the centroid update: multiplying by a power
     * of two is EXACT in IEEE doubles, so `floor(x * 2^24 + 0.5)` is a
     * deterministic integer any engine reproduces bit-for-bit.

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
@@ -27,95 +28,223 @@ import graft.sources.Warehouse
   *     model goes stale as the distribution drifts; the recall ladder
   *     (`sim_recall_matrix`) prices that staleness.
   *
-  * Determinism: the model is [[Ivf.train]]'s fixed-point Lloyd, and
-  * centroid doubles round-trip parquet bit-exactly, so the DuckDB
-  * oracle re-derives the identical persisted model from the corpus.
+  * Two layouts share every one of these operations ([[Layout]]): the
+  * flat one ([[Names]]) posts the vectors, the quantized one
+  * ([[PqNames]]) posts m PQ codes per vector and keeps its codebooks as
+  * a third model table (Jégou et al., TPAMI 2011 — the layout a 100 TB
+  * deployment serves, where the posting payload IS the IO bill).
+  *
+  * Determinism: the models are [[Ivf.train]]'s / [[Pq.train]]'s
+  * fixed-point Lloyd, and their doubles round-trip parquet bit-exactly,
+  * so the DuckDB oracle re-derives the identical persisted models from
+  * the corpus.
   */
 object IvfIndex {
 
+  /** The quantized layout's re-rank pool: its searches keep the ADC top
+    * `k·PoolFactor` and re-rank that pool exactly.
+    */
+  val PoolFactor = 4
+
+  /** The trained models an index's postings are written against: the
+    * coarse centroids and, on the quantized layout, the m PQ codebooks
+    * (empty on the flat layout).
+    */
+  final case class Models(cents: Array[Array[Double]],
+      books: Array[Array[Array[Double]]] = Array.empty)
+
   /** The flat ([[Names]]) and quantized ([[PqNames]]) layouts. Both keep
     * a coarse centroid table and postings partitioned by `centroid_id`,
-    * so one signature of [[delete]], [[compact]], [[health]] and
-    * [[tombstoneTable]] serves both.
+    * and every lifecycle operation is written once over both. A layout
+    * supplies only what really differs: what a posting row carries for
+    * its vector ([[encode]]) and how a pruned candidate slice is scored
+    * ([[rank]]).
     */
-  sealed trait Layout extends Tombstones.Index { def centroids: String }
+  sealed trait Layout extends Tombstones.Index {
+    def centroids: String
+    /** The posting columns that stand for the vector `vecCol`. */
+    private[operators] def rowCols(vecCol: String, models: Models): Seq[String]
+    /** Adds [[rowCols]] to `df`. */
+    private[operators] def encode(df: DataFrame, vecCol: String, models: Models): DataFrame
+    /** Top `k` of the candidate slice `s` by cosine to its query, as
+      * `s.keys` + `score`; `vectors` holds the full-precision vectors.
+      */
+    private[operators] def rank(s: Slice, idCol: String, vecCol: String,
+        models: Models, k: Int, vectors: DataFrame): DataFrame
+  }
 
-  /** Table-name pair for one persisted index. */
+  /** Table-name pair for one persisted FLAT index: the postings carry the
+    * vectors and score exactly.
+    */
   final case class Names(centroids: String, postings: String) extends Layout {
     def tables: Seq[String] = Seq(centroids, postings)
+    private[operators] def rowCols(vecCol: String, models: Models) = Seq(vecCol)
+    private[operators] def encode(df: DataFrame, vecCol: String, models: Models) = df
+    private[operators] def rank(s: Slice, idCol: String, vecCol: String,
+        models: Models, k: Int, vectors: DataFrame): DataFrame =
+      s.top(s.rows.select(s.keys.map(col) :+ cosine(col(vecCol), s.q): _*), idCol, k)
   }
+
+  /** Table-name triple for one persisted QUANTIZED index: coarse
+    * centroids + per-subspace PQ codebooks (both bounded model tables)
+    * and code-only posting lists. A row carries m small integer codes
+    * instead of the vector (a 64-dim float vector is 256 B, its m=4 code
+    * row 4 B); scoring is ADC over the codes ([[Pq.adcCosine]] — m
+    * `element_at`s per row, zero arithmetic on any original vector),
+    * keeping the approximate top `k·`[[PoolFactor]] pool, whose vectors
+    * alone are fetched from the source table by an id-keyed broadcast
+    * join for the exact re-rank — the standard PQ two-pass.
+    */
+  final case class PqNames(centroids: String, codebooks: String, postings: String)
+      extends Layout {
+    def tables: Seq[String] = Seq(centroids, codebooks, postings)
+    private[operators] def rowCols(vecCol: String, models: Models) =
+      models.books.indices.map(j => s"code$j")
+    // works through a scratch "centroid_id" column, so every caller
+    // encodes BEFORE the coarse assignment
+    private[operators] def encode(df: DataFrame, vecCol: String, models: Models) =
+      Pq.encode(df, vecCol, models.books)
+    private[operators] def rank(s: Slice, idCol: String, vecCol: String,
+        models: Models, k: Int, vectors: DataFrame): DataFrame = {
+      // a batch carries each query's vector to the re-rank
+      val carry = if (s.batch) Seq("qv") else Nil
+      val pool = s.top(s.rows.select((s.keys ++ carry).map(col)
+        :+ Pq.adcCosine(models.books, s.dt).as("score"): _*), idCol, k * PoolFactor)
+      val v = col(vecCol)
+      s.top(vectors.select(col(idCol), v).join(broadcast(pool.drop("score")), Seq(idCol))
+        .select(s.keys.map(col) :+ cosine(v, s.q): _*), idCol, k)
+    }
+  }
+
+  /** A pruned candidate slice: posting `rows` (in a batch, joined to the
+    * probe rows `qid`, `qv`, `dt`), the output `keys`, and the query — its
+    * vector `q` and ADC dot tables `dt`, literals for one query and the
+    * per-row columns for a batch.
+    */
+  private[operators] final case class Slice(rows: DataFrame, keys: Seq[String],
+      q: Column, dt: Column, batch: Boolean) {
+    /** Top `k` by score, ties to the smaller id: a distributed top-k for
+      * one query, a per-`qid` window for a batch.
+      */
+    def top(df: DataFrame, idCol: String, k: Int): DataFrame =
+      if (!batch) df.orderBy(col("score").desc, col(idCol)).limit(k)
+      else df.withColumn("rn", row_number().over(Window.partitionBy("qid")
+          .orderBy(col("score").desc, col(idCol))))
+        .filter(col("rn") <= k).drop("rn")
+  }
+
+  private def cosine(v: Column, q: Column): Column =
+    (Vectors.dot(v, q) / Vectors.norm(v)).as("score")
 
   def names(prefix: String, fingerprint: String): Names =
     Names(s"${prefix}_cent_$fingerprint", s"${prefix}_post_$fingerprint")
 
-  def exists(spark: SparkSession, n: Names): Boolean =
-    spark.catalog.tableExists(n.centroids) && spark.catalog.tableExists(n.postings)
+  def pqNames(prefix: String, fingerprint: String): PqNames =
+    PqNames(s"${prefix}_cent_$fingerprint", s"${prefix}_book_$fingerprint",
+      s"${prefix}_post_$fingerprint")
 
-  /** Train on `emb` (k = max(8, ⌈n/512⌉) unless given, iters Lloyd
-    * rounds) and persist model + assigned postings. The one-time cost a
-    * production index pays at build; every [[search]] after it is
-    * retrain-free. `payloadCols` ride along in the posting lists —
-    * metadata a FILTERED search predicates on must live IN the index
-    * (joining a side table per query would defeat the pruned scan).
+  def exists(spark: SparkSession, n: Layout): Boolean =
+    n.tables.forall(spark.catalog.tableExists)
+
+  /** Train on `emb` (k cells — [[Ivf.cellsFor]] is the corpus-scaled
+    * rule — iters Lloyd rounds; on the quantized layout also m codebooks
+    * of `pqK` codewords over the centroid-length vectors) and persist
+    * models + assigned postings. The one-time cost a production index
+    * pays at build; every [[search]] after it is retrain-free. `models`
+    * skips the training (callers may hand in session-cached models; both
+    * are deterministic functions of the corpus). `payloadCols` ride
+    * along in the posting lists — metadata a FILTERED search predicates
+    * on must live IN the index (joining a side table per query would
+    * defeat the pruned scan). Returns the models, which
+    * [[appendRows]] takes.
     */
-  def build(emb: DataFrame, idCol: String, vecCol: String, n: Names,
-      k: Int, iters: Int = 2,
-      payloadCols: Seq[String] = Nil): Array[Array[Double]] = {
+  def build(emb: DataFrame, idCol: String, vecCol: String, n: Layout,
+      k: Int, iters: Int = 2, payloadCols: Seq[String] = Nil,
+      m: Int = 4, pqK: Int = 4, models: Option[Models] = None): Models = {
     val spark = emb.sparkSession
     import spark.implicits._
     // a rebuild-by-name must not inherit a previous index's tombstones
     // (they would silently exclude re-indexed vectors from every read)
     Warehouse.dropWithLocation(spark, tombstoneTable(n))
-    val cents = Ivf.train(emb, idCol, vecCol, k = k, iters = iters)
+    val ms = models.getOrElse {
+      val cents = Ivf.train(emb, idCol, vecCol, k = k, iters = iters)
+      Models(cents, n match {
+        case _: PqNames => Pq.train(emb, idCol, vecCol, cents(0).length, m, pqK, iters)
+        case _: Names => Array.empty
+      })
+    }
     Warehouse.writeTable(
-      cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }.toDF("cid", "c"),
+      ms.cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }.toDF("cid", "c"),
       n.centroids)
-    Warehouse.writePartitioned(
-      Ivf.assignAny(emb, idCol, vecCol, cents)
-        .select((Seq(idCol, vecCol) ++ payloadCols :+ "centroid_id").map(col): _*),
+    n match {
+      case p: PqNames => Warehouse.writeTable((for {
+          (cb, j) <- ms.books.zipWithIndex.toSeq
+          (c, ci) <- cb.zipWithIndex
+        } yield (j, ci, c.toSeq)).toDF("sub", "cid", "c"), p.codebooks)
+      case _: Names =>
+    }
+    Warehouse.writePartitioned(Ivf.assignAny(n.encode(emb, vecCol, ms), idCol, vecCol, ms.cents)
+        .select(((idCol +: n.rowCols(vecCol, ms)) ++ payloadCols :+ "centroid_id").map(col): _*),
       n.postings, "centroid_id")
-    cents
+    ms
   }
 
-  /** Load the persisted model: k rows off the centroids table — the
-    * bounded driver-side state every IVF search starts from.
+  /** Load the persisted coarse model: k rows off the centroids table —
+    * the bounded driver-side state every IVF search starts from.
     */
   def loadCentroids(spark: SparkSession, n: Layout): Array[Array[Double]] =
     spark.table(n.centroids).orderBy("cid").select("c")
       .collect().map(_.getSeq[Double](0).toArray)
 
-  /** Grow the index WITHOUT retraining: assign `batch` to the existing
-    * centroids (map-side — zero Lloyd rounds anywhere in the job) and
-    * append into the postings partitions. At 100 TB this is the nightly
-    * ingest: hours of new vectors, never a re-cluster of the corpus.
-    *
-    * Pass-through columns are derived from the POSTINGS schema (id +
-    * vector + any payload columns the index was built with), so a
-    * payload-built index (filtered search) grows exactly like a bare
-    * one — the batch just has to carry the same columns. A re-ingested
-    * id clears its tombstone ([[Tombstones]]' re-ingest contract).
+  /** Load the persisted PQ codebooks: m × pqK rows off the codebooks
+    * table (bounded model state; these ARE the trained [[Pq.train]]
+    * arrays).
     */
-  def appendBatch(spark: SparkSession, n: Names, batch: DataFrame,
+  def loadCodebooks(spark: SparkSession, n: PqNames): Array[Array[Array[Double]]] =
+    spark.table(n.codebooks).orderBy("sub", "cid").collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map(_._2.map(_.getSeq[Double](2).toArray).toArray).toArray
+
+  private def loadModels(spark: SparkSession, n: Layout): Models =
+    Models(loadCentroids(spark, n), loadBooks(spark, n))
+
+  private def loadBooks(spark: SparkSession, n: Layout): Array[Array[Array[Double]]] =
+    n match {
+      case p: PqNames => loadCodebooks(spark, p)
+      case _: Names => Array.empty
+    }
+
+  /** Grow the index WITHOUT retraining: encode `batch` for the layout and
+    * assign it to the persisted centroids (map-side — zero Lloyd rounds
+    * anywhere in the job), then append into the postings partitions. At
+    * 100 TB this is the nightly ingest: hours of new vectors, never a
+    * re-cluster of the corpus. The batch must carry the vector and every
+    * payload column the index was built with. A re-ingested id clears
+    * its tombstone ([[Tombstones]]' re-ingest contract).
+    */
+  def appendBatch(spark: SparkSession, n: Layout, batch: DataFrame,
       idCol: String, vecCol: String): Unit = {
-    appendRows(spark, n, batch, idCol, vecCol, loadCentroids(spark, n))
+    appendRows(spark, n, batch, idCol, vecCol, loadModels(spark, n))
     Tombstones.clearReingested(spark, n, idCol, batch.select(col(idCol)))
   }
 
-  /** [[appendBatch]]'s row append alone, against the given model: the
-    * streaming drains load the k-row model once (per-batch reloads were
+  /** [[appendBatch]]'s row append alone, against the given models: the
+    * streaming drains keep [[build]]'s models (per-batch reloads were
     * ~20% of each micro-batch's cost), and prove that no appended id is
     * tombstoned, so they skip the tombstone clearing.
     */
-  private[graft] def appendRows(spark: SparkSession, n: Names, batch: DataFrame,
-      idCol: String, vecCol: String, cents: Array[Array[Double]]): Unit = {
-    val passCols = spark.table(n.postings).columns.filterNot(_ == "centroid_id")
-    val missing = passCols.filterNot(batch.columns.contains)
+  private[graft] def appendRows(spark: SparkSession, n: Layout, batch: DataFrame,
+      idCol: String, vecCol: String, models: Models): Unit = {
+    // pass-through = postings schema minus the partition column: id, the
+    // layout's row columns (made by encode) and any payload
+    val passCols = spark.table(n.postings).columns.filterNot(_ == "centroid_id").toSeq
+    val missing = (vecCol +: passCols.filterNot(n.rowCols(vecCol, models).contains))
+      .filterNot(batch.columns.contains)
     require(missing.isEmpty,
       s"batch is missing index column(s) ${missing.mkString(", ")} — " +
         s"the ${n.postings} postings carry (${passCols.mkString(", ")})")
-    Warehouse.appendInto(
-      Ivf.assignAny(batch, idCol, vecCol, cents)
-        .select((passCols :+ "centroid_id").map(col).toSeq: _*),
+    Warehouse.appendInto(Ivf.assignAny(n.encode(batch, vecCol, models), idCol, vecCol, models.cents)
+        .select((passCols :+ "centroid_id").map(col): _*),
       n.postings)
   }
 
@@ -128,9 +257,9 @@ object IvfIndex {
 
   /** Delete vectors by id — the PII-takedown / dedup-drop reality of a
     * curation pipeline: every read path ([[search]] / [[searchBatch]] /
-    * [[stats]] / [[health]] and the quantized searches) excludes them
-    * at once, and [[compact]] folds them into a physical rewrite of ONLY
-    * the affected cells ([[Tombstones]]). Idempotent (distinct ids).
+    * [[stats]] / [[health]]) excludes them at once, and [[compact]]
+    * folds them into a physical rewrite of ONLY the affected cells
+    * ([[Tombstones]]). Idempotent (distinct ids).
     */
   def delete(spark: SparkSession, n: Layout, idCol: String, ids: Seq[Long]): Unit =
     Tombstones.delete(spark, n, idCol, ids)
@@ -153,29 +282,34 @@ object IvfIndex {
   def compact(spark: SparkSession, n: Layout, idCol: String): Unit =
     Tombstones.compact(spark, n, idCol, "centroid_id", Nil)
 
-  /** Cells for a build over `rows` vectors: max(8, ⌈rows/512⌉). */
-  private[graft] def cellsFor(rows: Long): Int = math.max(8L, (rows + 511) / 512).toInt
-
   /** ACT on [[health]]'s rebuild signal — the one sanctioned time to
-    * pay Lloyd again: retrain the coarse quantizer on the LIVE rows
+    * pay Lloyd again: retrain every model of the layout on the LIVE rows
     * (tombstones excluded — the takedowns that triggered the rebuild
-    * never shape the new model), rewrite centroids + postings, and
-    * fold the tombstone table away (the physical rows are gone, so the
-    * read-path guard has nothing left to exclude). Payload columns are
-    * carried from the old postings schema, so a filtered index rebuilds
-    * intact. Flat layout only — the postings must carry `vecCol` (a
-    * quantized index re-encodes from the source table instead).
-    * Closes the lifecycle loop: build → search → grow → delete →
-    * observe ([[stats]]) → decide ([[health]]) → act (this).
+    * never shape the new model), rewrite the index and fold the
+    * tombstone table away (the physical rows are gone, so the read-path
+    * guard has nothing left to exclude). The cell count follows
+    * [[Ivf.cellsFor]] over the live rows; the PQ shape is read back from
+    * the persisted codebooks. Payload columns are carried from the old
+    * postings schema, so a filtered index rebuilds intact. The flat
+    * postings carry the live vectors; the code postings don't, so the
+    * quantized layout fetches them from `source` by an id-keyed join.
+    * Seeds follow [[Ivf.train]]'s first-k-by-id over the live slice
+    * (rank-based — a deleted low id never seeds). Closes the lifecycle
+    * loop: build → search → grow → delete → observe ([[stats]]) →
+    * decide ([[health]]) → act (this).
     */
-  def rebuild(spark: SparkSession, n: Names, idCol: String, vecCol: String,
-      iters: Int = 2): Array[Array[Double]] = {
+  def rebuild(spark: SparkSession, n: Layout, idCol: String, vecCol: String,
+      source: Option[DataFrame] = None, iters: Int = 2): Models = {
     val post = spark.table(n.postings)
+    // the codebooks fix the PQ row columns and shape; centroids are retrained
+    val old = Models(Array.empty, loadBooks(spark, n))
     val payload = post.columns
-      .filterNot(Set(idCol, vecCol, "centroid_id")).toSeq
+      .filterNot((Seq(idCol, "centroid_id") ++ n.rowCols(vecCol, old)).contains).toSeq
+    val withVec = if (post.columns.contains(vecCol)) post
+      else post.join(vectors(spark, n, source).select(col(idCol), col(vecCol)), Seq(idCol))
     // materialize the live rows BEFORE build overwrites their source
     val live = Tombstones.exclude(spark, n, idCol,
-      post.select((Seq(idCol, vecCol) ++ payload).map(col): _*))
+      withVec.select((Seq(idCol, vecCol) ++ payload).map(col): _*))
       .localCheckpoint()
     val liveCount = live.count()
     // a FULLY tombstoned index has nothing to retrain on: Lloyd over
@@ -187,42 +321,23 @@ object IvfIndex {
       s"rebuild of ${n.postings}: zero live rows (fully tombstoned) — " +
         "drop the index instead of retraining on an empty corpus")
     // build drops the tombstone table: the physical rows are gone
-    build(live, idCol, vecCol, n, k = cellsFor(liveCount), iters = iters,
-      payloadCols = payload)
+    build(live, idCol, vecCol, n, k = Ivf.cellsFor(liveCount), iters = iters,
+      payloadCols = payload, m = old.books.length,
+      pqK = old.books.headOption.map(_.length).getOrElse(0))
   }
 
-  /** [[rebuild]] for the QUANTIZED layout — closes the lifecycle
-    * asymmetry where [[health]]'s rebuild signal pointed at an action
-    * only the flat index could take: retrain the coarse quantizer AND
-    * all m codebooks on the LIVE rows (tombstones excluded), re-encode
-    * every live vector, rewrite all three tables, fold the tombstone
-    * table away. The code postings don't carry vectors, so live vectors
-    * are fetched from `source` by an id-keyed join (the searchPq
-    * re-rank economics applied to the rebuild); payload columns carry
-    * over from the old postings schema, so a filtered quantized index
-    * rebuilds intact. Seeds follow [[Ivf.train]]'s first-k-by-id over
-    * the live slice (rank-based — a deleted low id never seeds).
+  /** Where full-precision vectors are read: `from` when given, else the
+    * flat postings (which carry them). At scale pass the source table —
+    * one pushed-filter point read — as the postings fallback opens every
+    * cell's partition for one row (measured 3.9 s vs 0.6 s at 100× on a
+    * 391-cell index). The code postings carry no vectors.
     */
-  def rebuildPq(spark: SparkSession, n: PqNames, idCol: String, vecCol: String,
-      source: DataFrame, dim: Int, m: Int, pqK: Int, iters: Int = 2): Unit = {
-    val post = spark.table(n.postings)
-    val codeCols = (0 until m).map(j => s"code$j").toSet
-    val payload = post.columns
-      .filterNot(c => c == idCol || c == "centroid_id" || codeCols(c)).toSeq
-    // materialize the live rows (id + payload from the postings, vector
-    // from the source table) BEFORE buildPq overwrites their source
-    val live = Tombstones.exclude(spark, n, idCol,
-      post.select((idCol +: payload).map(col): _*))
-      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .localCheckpoint()
-    val liveCount = live.count()
-    require(liveCount > 0,
-      s"rebuildPq of ${n.postings}: zero live rows (fully tombstoned) — " +
-        "drop the index instead of retraining on an empty corpus")
-    // buildPq drops the tombstone table: the physical rows are gone
-    buildPq(live, idCol, vecCol, n, k = cellsFor(liveCount), dim = dim, m = m,
-      pqK = pqK, iters = iters, payloadCols = payload)
-  }
+  private def vectors(spark: SparkSession, n: Layout, from: Option[DataFrame]): DataFrame =
+    from.getOrElse(n match {
+      case f: Names => spark.table(f.postings)
+      case p: PqNames => throw new IllegalArgumentException(
+        s"${p.postings} posts PQ codes, not vectors: pass the source table")
+    })
 
   /** Index-health decision row — what [[stats]] observes, turned into
     * the operator's rebuild signal: live/tombstone volume, the
@@ -258,291 +373,70 @@ object IvfIndex {
 
   /** Search the persisted index: cosine top-`k` over the `nprobe`
     * probed cells, query = the indexed vector `queryId` (excluded from
-    * results). The plan is scan(partition-pruned) → project(DotProduct)
-    * → TakeOrderedAndProject: NO aggregate, NO Lloyd round — locked in
+    * results). The plan is scan(partition-pruned) → project(score) →
+    * TakeOrderedAndProject: NO aggregate, NO Lloyd round — locked in
     * PlanSpec. Returns (idCol, centroid_id, score).
     *
-    * `queryFrom` is where the query VECTOR is looked up — pass the
-    * source table (one pushed-filter point read) when you have it; the
-    * fallback reads the postings table, which at scale means opening
-    * every cell's partition for one row (measured 3.9 s vs 0.6 s at
-    * 100× on a 391-cell index). Production query vectors arrive from
-    * the application anyway — the index is probed, not point-scanned.
+    * `queryFrom` is where the query vector is looked up (and, on the
+    * quantized layout, the re-rank pool's vectors, so it is required
+    * there) — see [[vectors]]. Production query vectors arrive from the
+    * application anyway — the index is probed, not point-scanned.
     */
-  def search(spark: SparkSession, n: Names, idCol: String, vecCol: String,
+  def search(spark: SparkSession, n: Layout, idCol: String, vecCol: String,
       queryId: Long, k: Int = 10, nprobe: Int = 2,
       queryFrom: Option[DataFrame] = None,
       payloadFilter: Column = lit(true)): DataFrame = {
-    val post = spark.table(n.postings)
-    val q = queryFrom.getOrElse(post).filter(col(idCol) === queryId)
+    val vecs = vectors(spark, n, queryFrom)
+    val q = vecs.filter(col(idCol) === queryId)
       .select(Vectors.toDouble(col(vecCol)))
       .collect().head.getSeq[Double](0).toArray
-    val cents = loadCentroids(spark, n)
-    val probed = Ivf.probeSet(q, cents, nprobe)
-    val v = col(vecCol)
-    Tombstones.exclude(spark, n, idCol, post
-      // the payload predicate rides the SAME pruned scan (pushed to the
-      // posting files' row groups) — a filtered search costs the same
-      // probe as an unfiltered one, never a side-table join per query
+    val models = loadModels(spark, n)
+    val probed = Ivf.probeSet(q, models.cents, nprobe)
+    // the payload predicate rides the SAME pruned scan (pushed to the
+    // posting files' row groups) — a filtered search costs the same
+    // probe as an unfiltered one, never a side-table join per query
+    val rows = Tombstones.exclude(spark, n, idCol, spark.table(n.postings)
       .filter(col("centroid_id").isin(probed.toSeq: _*)
         && col(idCol) =!= queryId && payloadFilter))
-      .select(col(idCol), col("centroid_id"),
-        (Vectors.dot(v, typedlit(q.toSeq)) / Vectors.norm(v)).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    n.rank(Slice(rows, Seq(idCol, "centroid_id"), typedlit(q.toSeq),
+        Pq.adcDotLit(models.books, q), batch = false),
+      idCol, vecCol, models, k, vecs)
   }
 
   /** BATCH search over the persisted index: top-`k` neighbors for every
     * query id in ONE pass — the nightly-scoring shape. The query set
-    * (ids, vectors, probe cells) is driver-bounded and BROADCASTS; the
-    * posting scan is pruned to the UNION of all probe cells and joins
-    * on `centroid_id`, so each posting row is scored only against the
-    * queries probing its cell; ranking is a per-qid window over the
-    * probed slice. Retrain-free like [[search]] (no Lloyd, no corpus
-    * aggregate — PlanSpec-locked). Returns (qid, idCol, centroid_id,
-    * score) — [[search]]'s documented contract plus the query key.
+    * (ids, vectors, probe cells and, on the quantized layout, the m ADC
+    * dot tables) is driver-bounded and BROADCASTS; the posting scan is
+    * pruned to the UNION of all probe cells and joins on `centroid_id`,
+    * so each posting row is scored only against the queries probing its
+    * cell; ranking is a per-qid window over the probed slice.
+    * Retrain-free like [[search]] (no Lloyd, no corpus aggregate —
+    * PlanSpec-locked). Returns (qid, idCol, centroid_id, score) —
+    * [[search]]'s documented contract plus the query key.
     */
-  def searchBatch(spark: SparkSession, n: Names, idCol: String, vecCol: String,
+  def searchBatch(spark: SparkSession, n: Layout, idCol: String, vecCol: String,
       queryIds: Seq[Long], k: Int = 3, nprobe: Int = 2,
       queryFrom: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val post = spark.table(n.postings)
-    val qs = queryFrom.getOrElse(post)
-      .filter(col(idCol).isin(queryIds: _*))
+    val vecs = vectors(spark, n, queryFrom)
+    val qs = vecs.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol), Vectors.toDouble(col(vecCol)))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val cents = loadCentroids(spark, n)
-    val probes = broadcast(qs.toSeq.flatMap { case (qid, qv) =>
-      Ivf.probeSet(qv, cents, nprobe).toSeq.map(cid => (qid, cid, qv.toSeq))
-    }.toDF("qid", "__pcid", "qv"))
-    val allCells = qs.flatMap { case (_, qv) =>
-      Ivf.probeSet(qv, cents, nprobe)
-    }.distinct.toSeq
-    val v = col(vecCol)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("score").desc, col(idCol))
-    Tombstones.exclude(spark, n, idCol,
-        post.filter(col("centroid_id").isin(allCells: _*)))
-      .join(probes,
-        col("centroid_id") === col("__pcid") && col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol), col("centroid_id"),
-        (Vectors.dot(v, col("qv")) / Vectors.norm(v)).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
-  }
-
-  // --------------------------------------------------------------------
-  // Quantized persisted index (IVF-PQ): codes in the postings, not vectors
-  // --------------------------------------------------------------------
-
-  /** Table-name triple for one persisted QUANTIZED index: coarse
-    * centroids + per-subspace PQ codebooks (both bounded model tables)
-    * and code-only posting lists.
-    */
-  final case class PqNames(centroids: String, codebooks: String, postings: String)
-      extends Layout {
-    def tables: Seq[String] = Seq(centroids, codebooks, postings)
-  }
-
-  def pqNames(prefix: String, fingerprint: String): PqNames =
-    PqNames(s"${prefix}_cent_$fingerprint", s"${prefix}_book_$fingerprint",
-      s"${prefix}_post_$fingerprint")
-
-  def pqExists(spark: SparkSession, n: PqNames): Boolean =
-    spark.catalog.tableExists(n.centroids) &&
-      spark.catalog.tableExists(n.codebooks) &&
-      spark.catalog.tableExists(n.postings)
-
-  /** Build the QUANTIZED persisted index — what [[build]] persists at
-    * 100 TB, where the posting payload IS the memory/IO bill: the
-    * posting lists carry m small integer CODES per vector (m bytes)
-    * instead of the flat vector (dim × 4-8 B — a 64-dim float vector is
-    * 256 B, its m=4 code row is 4 B: ~32-64× less probe IO), and the
-    * full-precision vectors stay in the SOURCE table, read only for the
-    * tiny re-rank pool. Coarse quantizer and PQ codebooks ([[Ivf.train]]
-    * / [[Pq.train]] — callers may hand in session-cached models; both
-    * are deterministic functions of the corpus) persist as bounded model
-    * tables; postings partition by `centroid_id` exactly like the flat
-    * layout, so a probe is still directory pruning.
-    */
-  def buildPq(emb: DataFrame, idCol: String, vecCol: String, n: PqNames,
-      k: Int, dim: Int, m: Int, pqK: Int, iters: Int = 2,
-      coarseModel: Option[Array[Array[Double]]] = None,
-      books: Option[Array[Array[Array[Double]]]] = None,
-      payloadCols: Seq[String] = Nil): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // same stale-tombstone guard as the flat [[build]]
-    Warehouse.dropWithLocation(spark, tombstoneTable(n))
-    val cents = coarseModel.getOrElse(
-      Ivf.train(emb, idCol, vecCol, k = k, iters = iters))
-    val cbs = books.getOrElse(
-      Pq.train(emb, idCol, vecCol, dim, m, pqK, iters))
-    Warehouse.writeTable(
-      cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }.toDF("cid", "c"),
-      n.centroids)
-    Warehouse.writeTable(
-      (for {
-        (cb, j) <- cbs.zipWithIndex.toSeq
-        (c, ci) <- cb.zipWithIndex
-      } yield (j, ci, c.toSeq)).toDF("sub", "cid", "c"),
-      n.codebooks)
-    // encode BEFORE the coarse assignment: Pq.encode's per-subspace
-    // argmax works through a scratch "centroid_id" column and would
-    // clobber an already-present coarse cell id. Payload columns ride
-    // the code postings exactly like the flat layout's — a filtered
-    // quantized search predicates on the pruned code scan, never a
-    // side-table join.
-    Warehouse.writePartitioned(
-      Ivf.assignAny(Pq.encode(emb, vecCol, cbs), idCol, vecCol, cents)
-        .select((col(idCol) +: ((0 until m).map(j => col(s"code$j"))
-          ++ payloadCols.map(col)) :+ col("centroid_id")): _*),
-      n.postings, "centroid_id")
-  }
-
-  /** Grow the QUANTIZED index without retraining: the new batch is
-    * encoded with the persisted codebooks and assigned to the persisted
-    * coarse centroids — one map-side pass, zero Lloyd rounds anywhere —
-    * then appended into the code postings. Re-ingest clears tombstones
-    * exactly like the flat [[appendBatch]].
-    */
-  def appendBatchPq(spark: SparkSession, n: PqNames, batch: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    appendRowsPq(spark, n, batch, idCol, vecCol,
-      loadCentroids(spark, n), loadCodebooks(spark, n))
-    Tombstones.clearReingested(spark, n, idCol, batch.select(col(idCol)))
-  }
-
-  /** [[appendBatchPq]]'s row append alone — the flat [[appendRows]]. */
-  private[graft] def appendRowsPq(spark: SparkSession, n: PqNames,
-      batch: DataFrame, idCol: String, vecCol: String,
-      cents: Array[Array[Double]], books: Array[Array[Array[Double]]]): Unit = {
-    // pass-through = postings schema minus the partition column (id +
-    // codes + any payload the index was built with); codes come from
-    // the encode below, the rest must ride in on the batch
-    val passCols = spark.table(n.postings).columns.filterNot(_ == "centroid_id")
-    val codeCols = books.indices.map(j => s"code$j").toSet
-    val missing = passCols.filterNot(codeCols).filterNot(batch.columns.contains)
-    require(missing.isEmpty,
-      s"batch is missing index column(s) ${missing.mkString(", ")} — " +
-        s"the ${n.postings} postings carry (${passCols.mkString(", ")})")
-    Warehouse.appendInto(
-      Ivf.assignAny(Pq.encode(batch, vecCol, books), idCol, vecCol, cents)
-        .select((passCols :+ "centroid_id").map(col).toSeq: _*),
-      n.postings)
-  }
-
-  /** Load the persisted PQ codebooks: m × pqK rows off the codebooks
-    * table (bounded model state; doubles round-trip parquet bit-exactly,
-    * so these ARE the trained [[Pq.train]] arrays).
-    */
-  def loadCodebooks(spark: SparkSession, n: PqNames): Array[Array[Array[Double]]] =
-    spark.table(n.codebooks).orderBy("sub", "cid").collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.map(_.getSeq[Double](2).toArray).toArray).toArray
-
-  /** Search the quantized index ADC-first: probe the `nprobe` nearest
-    * cells (partition pruning, as in [[search]]), score the pruned
-    * posting CODES with per-subspace lookup tables
-    * ([[Pq.adcApproxCosine]] — m `element_at`s per row, zero arithmetic
-    * on any original vector), keep the approximate top `k·poolFactor`
-    * pool, then re-rank the pool at full precision by fetching ONLY its
-    * vectors from the source table (`queryFrom`) through an id-keyed
-    * broadcast join — the standard PQ two-pass. Retrain-free: zero Lloyd
-    * rounds, zero corpus aggregates (PlanSpec-locked). Returns
-    * (idCol, centroid_id, score).
-    */
-  def searchPq(spark: SparkSession, n: PqNames, idCol: String, vecCol: String,
-      queryId: Long, k: Int = 10, nprobe: Int = 2, poolFactor: Int = 4,
-      queryFrom: DataFrame,
-      payloadFilter: Column = lit(true)): DataFrame = {
-    val q = queryFrom.filter(col(idCol) === queryId)
-      .select(Vectors.toDouble(col(vecCol)))
-      .collect().head.getSeq[Double](0).toArray
-    val cents = loadCentroids(spark, n)
-    val books = loadCodebooks(spark, n)
-    val probed = Ivf.probeSet(q, cents, nprobe)
-    val pool = Tombstones.exclude(spark, n, idCol, spark.table(n.postings)
-        .filter(col("centroid_id").isin(probed.toSeq: _*)
-          && col(idCol) =!= queryId && payloadFilter))
-      .select(col(idCol), col("centroid_id"),
-        Pq.adcApproxCosine(books, q).as("__as"))
-      .orderBy(col("__as").desc, col(idCol))
-      .limit(k * poolFactor)
-    val v = col(vecCol)
-    queryFrom.select(col(idCol), v)
-      .join(broadcast(pool), Seq(idCol))
-      .select(col(idCol), col("centroid_id"),
-        (Vectors.dot(v, typedlit(q.toSeq)) / Vectors.norm(v)).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** BATCH search on the QUANTIZED index — [[searchBatch]]'s one-pass
-    * nightly-scoring shape on the code postings: the query set is
-    * driver-bounded and BROADCASTS carrying, per query, its probe cells
-    * AND its m ADC dot-lookup tables (m·pqK doubles — the per-query
-    * half of [[Pq.adcApproxCosine]]'s state; the codeword-norm table is
-    * query-INDEPENDENT and rides as one literal). The pruned code scan
-    * joins the probe rows on `centroid_id`, each posting row ADC-scores
-    * only against the queries probing its cell (m nested `element_at`s
-    * — zero arithmetic on any original vector), the per-qid approximate
-    * top-(k·poolFactor) pools re-rank exactly from the source table
-    * through ONE id-keyed broadcast join. Retrain-free (no Lloyd, no
-    * corpus aggregate — PlanSpec-locked). Returns (qid, idCol,
-    * centroid_id, score).
-    */
-  def searchBatchPq(spark: SparkSession, n: PqNames, idCol: String,
-      vecCol: String, queryIds: Seq[Long], k: Int = 3, nprobe: Int = 2,
-      poolFactor: Int = 4, queryFrom: DataFrame): DataFrame = {
-    import spark.implicits._
-    val qs = queryFrom.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol), Vectors.toDouble(col(vecCol)))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val cents = loadCentroids(spark, n)
-    val books = loadCodebooks(spark, n)
-    val m = books.length
+    val models = loadModels(spark, n)
     // per-query ADC dot tables (Pq.adcDotTables — the ONE definition of
-    // the per-subspace sequential folds, shared with Pq.adcApproxCosine
-    // so batch and single search can never drift by an ulp), attached
-    // to each probe row
-    val probes = broadcast(qs.toSeq.flatMap { case (qid, qv) =>
-      val dt = Pq.adcDotTables(books, qv).map(_.toSeq).toSeq
-      Ivf.probeSet(qv, cents, nprobe).toSeq.map(cid => (qid, cid, qv.toSeq, dt))
-    }.toDF("qid", "__pcid", "qv", "dt"))
-    val allCells = qs.flatMap { case (_, qv) =>
-      Ivf.probeSet(qv, cents, nprobe)
-    }.distinct.toSeq
-    val n2T: Seq[Seq[Double]] = Pq.adcNormTables(books).map(_.toSeq).toSeq
-    def codeAt(j: Int) = col(s"code$j").cast("int") + 1
-    val approxDot = (0 until m)
-      .map(j => element_at(element_at(col("dt"), j + 1), codeAt(j)))
-      .reduce(_ + _)
-    val approxN2 = (0 until m)
-      .map(j => element_at(element_at(typedlit(n2T), j + 1), codeAt(j)))
-      .reduce(_ + _)
-    val wPool = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("__as").desc, col(idCol))
-    val pool = Tombstones.exclude(spark, n, idCol,
-        spark.table(n.postings).filter(col("centroid_id").isin(allCells: _*)))
-      .join(probes,
+    // the per-subspace folds, so batch and single search can never
+    // drift by an ulp) ride each probe row
+    val probes = qs.toSeq.flatMap { case (qid, qv) =>
+      val dt = Pq.adcDotTables(models.books, qv).map(_.toSeq).toSeq
+      Ivf.probeSet(qv, models.cents, nprobe).toSeq.map(cid => (qid, cid, qv.toSeq, dt))
+    }
+    val rows = Tombstones.exclude(spark, n, idCol, spark.table(n.postings)
+        .filter(col("centroid_id").isin(probes.map(_._2).distinct: _*)))
+      .join(broadcast(probes.toDF("qid", "__pcid", "qv", "dt")),
         col("centroid_id") === col("__pcid") && col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol), col("centroid_id"), col("qv"),
-        (approxDot / sqrt(approxN2)).as("__as"))
-      .withColumn("rn", row_number().over(wPool))
-      .filter(col("rn") <= k * poolFactor)
-      .select(col("qid"), col(idCol), col("centroid_id"), col("qv"))
-    val v = col(vecCol)
-    val wFin = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("score").desc, col(idCol))
-    queryFrom.select(col(idCol), v)
-      .join(broadcast(pool), Seq(idCol))
-      .select(col("qid"), col(idCol), col("centroid_id"),
-        (Vectors.dot(v, col("qv")) / Vectors.norm(v)).as("score"))
-      .withColumn("rn", row_number().over(wFin))
-      .filter(col("rn") <= k)
-      .drop("rn")
+    n.rank(Slice(rows, Seq("qid", idCol, "centroid_id"), col("qv"), col("dt"),
+        batch = true),
+      idCol, vecCol, models, k, vecs)
   }
 
   /** Index-health report: per-cell posting-list volume and id envelope
@@ -552,7 +446,7 @@ object IvfIndex {
     * cell-keyed aggregate; at 100 TB this reads parquet footers'
     * partition stats more than data.
     */
-  def stats(spark: SparkSession, n: Names, idCol: String): DataFrame =
+  def stats(spark: SparkSession, n: Layout, idCol: String): DataFrame =
     Tombstones.exclude(spark, n, idCol, spark.table(n.postings))
       .groupBy(col("centroid_id").cast("long").as("centroid_id"))
       .agg(count(lit(1)).as("n_vectors"),

@@ -105,9 +105,10 @@ object Pq {
   /** Per-subspace ADC dot-lookup tables for query `q`: `dotT(j)(c)` =
     * ⟨codeword c of subspace j, query subvector j⟩, each a sequential
     * left-to-right fold (the oracle's list_sum). THE single source of
-    * truth for the per-query half of the ADC IEEE tree — consumed by
-    * [[adcApproxCosine]] and by [[IvfIndex.searchBatchPq]]'s broadcast
-    * probe rows, so single and batch search can never drift by an ulp.
+    * truth for the per-query half of the ADC IEEE tree — the literal of
+    * [[adcDotLit]] and the per-row column of [[IvfIndex.searchBatch]]'s
+    * broadcast probe rows, so single and batch search can never drift
+    * by an ulp.
     */
   private[operators] def adcDotTables(
       codebooks: Array[Array[Array[Double]]], q: Array[Double]): Array[Array[Double]] = {
@@ -117,45 +118,40 @@ object Pq {
     }
   }
 
-  /** Query-INDEPENDENT half of the ADC state: `n2T(j)(c)` = |codeword c
-    * of subspace j|², the same sequential fold. Shared like
-    * [[adcDotTables]].
-    */
-  private[operators] def adcNormTables(
-      codebooks: Array[Array[Array[Double]]]): Array[Array[Double]] =
-    codebooks.map(_.map(c => c.map(x => x * x).sum))
+  /** [[adcDotTables]] of one query as a literal column for [[adcCosine]]. */
+  private[operators] def adcDotLit(
+      codebooks: Array[Array[Array[Double]]], q: Array[Double]): Column =
+    typedlit(adcDotTables(codebooks, q).map(_.toSeq).toSeq)
 
   /** The ADC approximate-cosine column over already-encoded rows
-    * (`code0..code{m-1}` present): per-subspace lookup tables from the
-    * full-precision query — driver-side, m·k doubles, the same
-    * sequential folds the oracle's list_sum runs — composed as m
-    * `element_at` lookups against broadcast literals. ONE definition of
-    * the ADC IEEE tree ([[adcDotTables]]/[[adcNormTables]]), shared by
-    * the inline searches here and the persisted quantized index
-    * ([[IvfIndex.searchPq]]), so the two can never drift by an ulp.
+    * (`code0..code{m-1}` present): the m looked-up ⟨codeword, query⟩ dots
+    * over the square root of the m looked-up codeword norms |codeword|²
+    * (query-INDEPENDENT, the same sequential folds, one literal). `dotT`
+    * holds the query's [[adcDotTables]]: a literal ([[adcDotLit]]) for
+    * one query, a per-row column for a batch of them. ONE definition of
+    * the ADC IEEE tree, shared by the inline searches here and both
+    * searches of the persisted quantized index ([[IvfIndex]]), so they
+    * can never drift by an ulp.
     */
-  private[operators] def adcApproxCosine(
-      codebooks: Array[Array[Array[Double]]], q: Array[Double]): Column = {
-    val m = codebooks.length
-    val dotT = adcDotTables(codebooks, q)
-    val n2T = adcNormTables(codebooks)
-    def lookup(t: Array[Array[Double]], j: Int): Column =
-      element_at(typedlit(t(j).toSeq), col(s"code$j").cast("int") + 1)
-    val approxDot = (0 until m).map(j => lookup(dotT, j)).reduce(_ + _)
-    val approxN2 = (0 until m).map(j => lookup(n2T, j)).reduce(_ + _)
-    approxDot / sqrt(approxN2)
+  private[operators] def adcCosine(
+      codebooks: Array[Array[Array[Double]]], dotT: Column): Column = {
+    val n2T = typedlit(codebooks.map(_.map(c => c.map(x => x * x).sum).toSeq).toSeq)
+    def lookup(t: Column, j: Int): Column =
+      element_at(element_at(t, j + 1), col(s"code$j").cast("int") + 1)
+    val subs = codebooks.indices
+    subs.map(lookup(dotT, _)).reduce(_ + _) / sqrt(subs.map(lookup(n2T, _)).reduce(_ + _))
   }
 
   /** Shared ADC pool + exact re-rank over an already-restricted
     * candidate set: approximate-cosine top `k·poolFactor`
-    * ([[adcApproxCosine]]), exact cosine top `k` inside the pool.
+    * ([[adcCosine]]), exact cosine top `k` inside the pool.
     */
   private def adcRerank(candidates: DataFrame, idCol: String, vecCol: String,
       codebooks: Array[Array[Array[Double]]], q: Array[Double],
       k: Int, poolFactor: Int): DataFrame = {
     val pool = encode(candidates, vecCol, codebooks)
       .select(col(idCol), col(vecCol),
-        adcApproxCosine(codebooks, q).as("__as"))
+        adcCosine(codebooks, adcDotLit(codebooks, q)).as("__as"))
       .orderBy(col("__as").desc, col(idCol))
       .limit(k * poolFactor)
     val v = col(vecCol)

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** User-side queries (SURVEY §2.3 J1/J4, §3.2).
   *
@@ -29,13 +31,19 @@ object UserQueries {
   /** J4 chain: screen_name → that user's tweets, with optional
     * keyword/hashtag OR-refinement (implementing the *intended* semantics
     * of the reference's clobbered $or, cache.py:180-190) sorted like the
-    * reference (retweet_count, favorite_count DESC).
+    * reference (retweet_count, favorite_count DESC), every row kept.
     *
     * `tweetsWithAuthors` is [[TweetSearch.withAuthors]], which the engine
     * joins once, so resolving the screen name is a filter on
     * `author_screen_name`, not a join per request; the answer has the
     * curated tweet columns only. Needs `users.id` unique, as that join
     * does.
+    *
+    * Eager, one Spark job: the filter's rows are collected unordered
+    * (the scan keeps every task) and ordered on the driver, where a
+    * global `orderBy` would add a range-partition sample and a shuffle.
+    * The answer is a local frame. PRECONDITION: one user's tweets fit
+    * the driver, as the engine's cached answer already requires.
     */
   def tweetsForUser(
       tweetsWithAuthors: DataFrame,
@@ -49,9 +57,25 @@ object UserQueries {
       case (None, hs) if hs.nonEmpty => Predicates.hashtagIn(hs)
       case _                         => lit(true)
     }
-    tweetsWithAuthors
+    val rows = tweetsWithAuthors
       .filter(col("author_screen_name") === screenName && refine)
       .drop(TweetSearch.AuthorColumns: _*)
-      .orderBy(col("retweet_count").desc, col("favorite_count").desc, col("id_str"))
+    val sorted = rows.collect().sorted(referenceOrder(rows.schema))
+    rows.sparkSession.createDataFrame(java.util.Arrays.asList(sorted: _*), rows.schema)
+  }
+
+  /** `retweet_count DESC, favorite_count DESC, id_str ASC` as Spark
+    * orders them: nulls last under DESC and first under ASC, strings by
+    * their UTF-8 bytes, the counts as integers.
+    */
+  private def referenceOrder(schema: StructType): Ordering[Row] = {
+    def key[T: Ordering](name: String)(f: Any => T): Ordering[Row] = {
+      val i = schema.fieldIndex(name)
+      Ordering.Option[T].on(r => Option(r.get(i)).map(f))
+    }
+    implicit val utf8: Ordering[UTF8String] = (x, y) => x.compareTo(y)
+    def count(name: String) = key(name)(_.asInstanceOf[Number].longValue).reverse
+    count("retweet_count").orElse(count("favorite_count"))
+      .orElse(key("id_str")(v => UTF8String.fromString(v.toString)))
   }
 }

@@ -308,7 +308,8 @@ private[queries] object CatalogShared {
     * — final codes). `finalSrc` lets the FINAL assignment run over a
     * different (larger) source than training — the stale-model shape:
     * codebooks learned on the pre-ingest slice, codes assigned to the
-    * full grown corpus ([[graft.operators.IvfIndex.appendBatchPq]]).
+    * full grown corpus ([[graft.operators.IvfIndex.appendBatch]] on the
+    * quantized layout).
     */
   private def lloydCtes(sfx: String, eName: String, dim: Int,
       seedPred: String, finalSrc: Option[String] = None): String = {
@@ -374,7 +375,7 @@ private[queries] object CatalogShared {
     * corpus (e0..e3), codebooks trained ONLY on the pre-ingest slice
     * (eo0..eo3, vec_id < 250 — the `sim_index_incremental` boundary),
     * final codes assigned to the FULL corpus — exactly what
-    * [[graft.operators.IvfIndex.appendBatchPq]] persists when a new
+    * [[graft.operators.IvfIndex.appendBatch]] persists when a new
     * batch is encoded with the existing codebooks.
     */
   private lazy val pqChainsStaleCtes: String = {
@@ -548,14 +549,14 @@ private[queries] object CatalogShared {
   }
 
   /** The QUANTIZED persisted index on the SQL front end
-    * (s14_sql_pq_search) — the SQL face of
-    * [[graft.operators.IvfIndex.searchPq]], i.e. the index a 100 TB
+    * (s14_sql_pq_search) — the SQL face of the quantized
+    * [[graft.operators.IvfIndex.search]], i.e. the index a 100 TB
     * deployment actually serves: probe = the S9 centroid-CTE rank,
     * ADC = a per-(subspace, codeword) lookup CTE built by dotting each
     * codebook row against the query's sub-vector (the same sequential
     * IEEE fold as [[graft.operators.Pq.adcDotTables]] — `dot_product`
     * is the registered native expression), pool = the approximate-
-    * cosine top-(k·poolFactor) over the PRUNED code postings (m
+    * cosine top-(k·PoolFactor) over the PRUNED code postings (m
     * equi-joins on the code columns — zero arithmetic on any original
     * vector), re-rank = exact cosine over only the pool's vectors
     * fetched from the source table. A SQL-only analyst searches the
@@ -622,7 +623,7 @@ private[queries] object CatalogShared {
       "FROM tr FULL OUTER JOIN vr ON tr.doc_id = vr.doc_id) " +
       "SELECT doc_id, has_text, has_vec FROM fus ORDER BY rrf DESC, doc_id LIMIT 10"
 
-  /** Twin of `sim_index_pq` ([[graft.operators.IvfIndex.searchPq]]) —
+  /** Twin of `sim_index_pq` ([[graft.operators.IvfIndex.search]]) —
     * the QUANTIZED persisted index: same coarse model ([[ivfModelCtes]])
     * and PQ chains as the inline IVF-PQ twin, but the output carries
     * WHICH posting cell each hit came from (centroid_id), proving the
@@ -643,7 +644,7 @@ private[queries] object CatalogShared {
     " JOIN lab l ON l.vec_id = a0.vec_id AND l.label <= 3")
 
   /** Twin of `sim_index_pq_batch` ([[graft.operators.IvfIndex
-    * .searchBatchPq]]): the quantized search for EVERY query in one
+    * .searchBatch]] on the quantized layout): the quantized search for EVERY query in one
     * statement — per-qid probe ranks over the coarse model, ADC scoring
     * of the rank-filtered code cells against each query's per-subspace
     * dot tables (qb0..qb3 joined on qid; codeword norms are
@@ -749,7 +750,7 @@ private[queries] object CatalogShared {
   }
 
   /** Twin of `sim_index_pq_rebuild` — [[graft.operators.IvfIndex
-    * .rebuildPq]] acted on the takedown signal, then the quantized
+    * .rebuild]] acted on the takedown signal, then the quantized
     * search ran on the rebuilt artifacts: coarse model AND all four PQ
     * codebooks retrained on the LIVE slice (vec_id % 10 <> 3; seeds =
     * first-k/first-4 live ids BY RANK — a deleted low id never seeds,

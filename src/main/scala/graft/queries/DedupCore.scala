@@ -194,7 +194,7 @@ private[queries] object DedupCoreQueries {
     Q("sim_ivf_ann",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
+        val k = graft.operators.Ivf.cellsFor(emb.count())
         val centroids = cachedModel(s"ivf|${embKey(d)}|k=$k|it=2") {
           graft.operators.Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2) }
         graft.operators.Ivf.search(emb, "vec_id", "embedding", centroids, 0L, k = 10, nprobe = 2)
@@ -231,7 +231,7 @@ private[queries] object DedupCoreQueries {
     Q("sim_ivfpq_ann",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val kc = math.max(8L, (emb.count() + 511) / 512).toInt
+        val kc = graft.operators.Ivf.cellsFor(emb.count())
         val coarse = cachedModel(s"ivf|${embKey(d)}|k=$kc|it=2") {
           graft.operators.Ivf.train(emb, "vec_id", "embedding", k = kc, iters = 2) }
         val books = cachedModel(s"pq|${embKey(d)}|m=4|k=4|it=2") {
@@ -253,7 +253,7 @@ private[queries] object DedupCoreQueries {
     Q("sim_sq8_ann",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
+        val k = graft.operators.Ivf.cellsFor(emb.count())
         val centroids = cachedModel(s"ivf|${embKey(d)}|k=$k|it=2") {
           graft.operators.Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2) }
         graft.operators.Ivf.searchQuantized(emb, "vec_id", "embedding",

@@ -31,7 +31,7 @@ private[queries] object StreamingQueries {
     cachedBuild(s"ivfidx|ivsv|$fp") {
       if (!IvfIndex.exists(s, n)) {
         val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
+        val k = graft.operators.Ivf.cellsFor(emb.count())
         IvfIndex.build(emb, "vec_id", "embedding", n, k = k)
       }
       java.lang.Boolean.TRUE
@@ -333,7 +333,7 @@ private[queries] object StreamingQueries {
     // ([[graft.streaming.EventStream.drainIndexMaintainPq]]) — the
     // stream_index_delete story against the index a 100 TB deployment
     // actually serves: ingest micro-batches encode through the
-    // PERSISTED codebooks (appendBatchPq — zero Lloyd rounds per
+    // build's codebooks (IvfIndex.appendRows — zero Lloyd rounds per
     // batch), takedown events tombstone by id, and the post-drain
     // quantized search (ADC pool + exact re-rank) must exclude every
     // streamed takedown. Disjoint add/del id sets make batch order
@@ -350,7 +350,7 @@ private[queries] object StreamingQueries {
         graft.streaming.EventStream
           .drainIndexMaintainPq(s, emb, "vec_id", "embedding",
             splitId = 250L, deleteIds = takedown, queryId = 0L,
-            k = 10, nprobe = 2, poolFactor = 4, dim = 64, m = 4, pqK = 4)
+            k = 10, nprobe = 2, m = 4, pqK = 4)
           .select(col("vec_id"),
             col("centroid_id").cast("long").as("centroid_id"),
             (col("vec_id") >= 250).as("is_new"))

@@ -822,7 +822,7 @@ private[queries] object TrainingQueries {
         // vector arm: published index on the pre-boundary slice
         val emb = Tables.embeddings(s, d)
         val old = emb.filter(col("vec_id") < 250)
-        val k = math.max(8L, (old.count() + 511) / 512).toInt
+        val k = graft.operators.Ivf.cellsFor(old.count())
         IvfIndex.build(old, "vec_id", "embedding", vn, k = k)
         // delta = tonight's rows not yet indexed (id-pruned anti-join);
         // checkpoint cuts the lineage before appending into the same
@@ -847,12 +847,11 @@ private[queries] object TrainingQueries {
           s"pq_stale|${CatalogShared.embKey(d)}|m=4|k=4|it=2") {
           graft.operators.Pq.train(old, "vec_id", "embedding",
             dim = 64, m = 4, k = 4, iters = 2) }
-        IvfIndex.buildPq(old, "vec_id", "embedding", qn, k = k,
-          dim = 64, m = 4, pqK = 4,
-          coarseModel = Some(coarse), books = Some(books))
+        IvfIndex.build(old, "vec_id", "embedding", qn, k = k,
+          models = Some(IvfIndex.Models(coarse, books)))
         val addedPq = emb.join(s.table(qn.postings).select("vec_id"),
           Seq("vec_id"), "left_anti").localCheckpoint()
-        IvfIndex.appendBatchPq(s, qn, addedPq, "vec_id", "embedding")
+        IvfIndex.appendBatch(s, qn, addedPq, "vec_id", "embedding")
         IvfIndex.delete(s, qn, "vec_id",
           old.filter(col("vec_id") % 10 === 3).select("vec_id"))
         IvfIndex.compact(s, qn, "vec_id")
@@ -1506,7 +1505,7 @@ private[queries] object TrainingQueries {
     // index a 100 TB deployment actually serves. The same nightly that
     // maintains the text and flat-vector indexes also grows the IVF-PQ
     // layout: the delta is encoded through the PUBLISHED codebooks
-    // (zero Lloyd rounds, zero codebook retrains — appendBatchPq), the
+    // (zero Lloyd rounds, zero codebook retrains — appendBatch), the
     // takedown set folds via the DataFrame-face delete + compact
     // (physical rewrite of only the affected cells). The output is the
     // post-publish quantized serving result (ADC over the pruned code
@@ -1517,9 +1516,8 @@ private[queries] object TrainingQueries {
       (s, d) => {
         val (_, _, qn) = ensurePublishServing(s, d)
         graft.operators.IvfIndex
-          .searchPq(s, qn, "vec_id", "embedding", 0L, k = 10,
-            nprobe = 2, poolFactor = 4,
-            queryFrom = Tables.embeddings(s, d))
+          .search(s, qn, "vec_id", "embedding", 0L, k = 10,
+            nprobe = 2, queryFrom = Some(Tables.embeddings(s, d)))
           .select(col("vec_id"),
             col("centroid_id").cast("long").as("centroid_id"),
             (col("vec_id") >= 250).as("is_new"))

@@ -56,7 +56,7 @@ private[queries] object VectorQueries {
     Q("dedup_semantic",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
+        val k = graft.operators.Ivf.cellsFor(emb.count())
         val cents = cachedModel(s"ivf|${embKey(d)}|k=$k|it=2") {
           graft.operators.Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2) }
         graft.operators.SemDedup
@@ -190,7 +190,7 @@ private[queries] object VectorQueries {
     Q("emb_outliers",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
+        val k = graft.operators.Ivf.cellsFor(emb.count())
         val cents = cachedModel(s"ivf|${embKey(d)}|k=$k|it=2") {
           graft.operators.Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2) }
         val asg = graft.operators.Ivf
@@ -239,46 +239,46 @@ private[queries] object VectorQueries {
           // (model trained on it), >= 250 arrives later and is ASSIGNED,
           // never retrained on — the dedup_incremental split applied to ANN
           val old = emb.filter(col("vec_id") < 250)
-          val k = math.max(8L, (old.count() + 511) / 512).toInt
-          IvfIndex.build(old, "vec_id", "embedding", n, k = k)
+          IvfIndex.build(old, "vec_id", "embedding", n,
+            k = graft.operators.Ivf.cellsFor(old.count()))
           IvfIndex.appendBatch(s, n,
             emb.filter(col("vec_id") >= 250), "vec_id", "embedding")
-        } else {
-          val k = math.max(8L, (emb.count() + 511) / 512).toInt
-          IvfIndex.build(emb, "vec_id", "embedding", n, k = k,
-            payloadCols = payloadCols)
-        }
+        } else buildFull(s, d, emb, n, payloadCols)
       }
       java.lang.Boolean.TRUE
     }
     n
   }
 
-  /** Build-once wrapper for the QUANTIZED persisted index
-    * ([[graft.operators.IvfIndex.buildPq]]): coarse + PQ models come
-    * from the session model cache (shared with the inline IVF-PQ/recall
-    * queries — identical deterministic artifacts), postings persist
-    * CODES only.
+  /** Build `n` on the full corpus with the corpus-scaled cell count. A
+    * quantized layout takes its coarse + PQ models from the session
+    * model cache (shared with the inline IVF-PQ/recall queries —
+    * identical deterministic artifacts) and posts CODES only.
     */
+  private def buildFull(s: SparkSession, d: String, emb: DataFrame,
+      n: graft.operators.IvfIndex.Layout, payloadCols: Seq[String] = Nil): Unit = {
+    import graft.operators.{Ivf, IvfIndex, Pq}
+    val k = Ivf.cellsFor(emb.count())
+    val models = n match {
+      case _: IvfIndex.PqNames => Some(IvfIndex.Models(
+        cachedModel(s"ivf|${embKey(d)}|k=$k|it=2") {
+          Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2) },
+        cachedModel(s"pq|${embKey(d)}|m=4|k=4|it=2") {
+          Pq.train(emb, "vec_id", "embedding", dim = 64, m = 4, k = 4, iters = 2) }))
+      case _: IvfIndex.Names => None
+    }
+    IvfIndex.build(emb, "vec_id", "embedding", n, k = k,
+      payloadCols = payloadCols, models = models)
+  }
+
+  /** Build-once wrapper for the QUANTIZED persisted index ([[buildFull]]). */
   private def ensurePqIndex(s: SparkSession, d: String, prefix: String,
       payloadCols: Seq[String] = Nil): graft.operators.IvfIndex.PqNames = {
     import graft.operators.IvfIndex
     val fp = graft.util.Paths.corpusFingerprint(d, Seq("embeddings"))
     val n = IvfIndex.pqNames(prefix, fp)
     cachedBuild(s"ivfidx_pq|$prefix|$fp") {
-      if (!IvfIndex.pqExists(s, n)) {
-        val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
-        val coarse = cachedModel(s"ivf|${embKey(d)}|k=$k|it=2") {
-          graft.operators.Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2) }
-        val books = cachedModel(s"pq|${embKey(d)}|m=4|k=4|it=2") {
-          graft.operators.Pq.train(emb, "vec_id", "embedding",
-            dim = 64, m = 4, k = 4, iters = 2) }
-        IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = k,
-          dim = 64, m = 4, pqK = 4,
-          coarseModel = Some(coarse), books = Some(books),
-          payloadCols = payloadCols)
-      }
+      if (!IvfIndex.exists(s, n)) buildFull(s, d, Tables.embeddings(s, d), n, payloadCols)
       java.lang.Boolean.TRUE
     }
     n
@@ -297,8 +297,7 @@ private[queries] object VectorQueries {
     cachedBuild(s"ivfidx|ivd|$fp") {
       if (!IvfIndex.exists(s, n)) {
         val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
-        IvfIndex.build(emb, "vec_id", "embedding", n, k = k)
+        buildFull(s, d, emb, n)
         // DataFrame-face delete: the takedown set is a corpus fraction
         // (10% of vec_ids) — it must never transit the driver
         IvfIndex.delete(s, n, "vec_id",
@@ -309,16 +308,18 @@ private[queries] object VectorQueries {
     n
   }
 
-  /** Build-once wrapper for the REBUILT index: build → delete the
-    * standing takedown set (the health signal fires at 10% tombstones)
-    * → [[graft.operators.IvfIndex.rebuild]] ACTS on it — retrain on
-    * the live rows, rewrite both tables, fold the tombstones away.
+  /** Build-once wrapper for a REBUILT index of either layout: build on
+    * the full corpus ([[buildFull]]) → delete the standing takedown set
+    * (the health signal fires at 10% tombstones) →
+    * [[graft.operators.IvfIndex.rebuild]] ACTS on it — retrain every
+    * model on the live rows (the quantized layout fetches their vectors
+    * from the corpus by id), rewrite the index, fold the tombstones away.
     */
-  private def ensureRebuiltIndex(s: SparkSession,
-      d: String): graft.operators.IvfIndex.Names = {
+  private def ensureRebuilt[N <: graft.operators.IvfIndex.Layout](
+      s: SparkSession, d: String, prefix: String)(names: (String, String) => N): N = {
     import graft.operators.IvfIndex
     val fp = graft.util.Paths.corpusFingerprint(d, Seq("embeddings"))
-    val n = IvfIndex.names("ivrr", fp)
+    val n = names(prefix, fp)
     // COMPLETION marker, not IvfIndex.exists: a prior JVM that died
     // between build and rebuild leaves exists=true with no tombstone
     // table — indistinguishable from a finished rebuild — so gating on
@@ -327,64 +328,17 @@ private[queries] object VectorQueries {
     // state short of it re-runs the (idempotent) delete+rebuild chain:
     // re-deleting ids the rebuild already folded tombstones absent
     // rows (the anti-join no-ops) and a re-rebuild retrains on the
-    // same live slice → the same deterministic model.
-    val markT = s"ivrr_done_$fp"
-    cachedBuild(s"ivfidx|ivrr|$fp") {
+    // same live slice → the same deterministic models.
+    val markT = s"${prefix}_done_$fp"
+    cachedBuild(s"ivfidx|$prefix|$fp") {
       if (!s.catalog.tableExists(markT)) {
         val emb = Tables.embeddings(s, d)
-        if (!IvfIndex.exists(s, n)) {
-          val k = math.max(8L, (emb.count() + 511) / 512).toInt
-          IvfIndex.build(emb, "vec_id", "embedding", n, k = k)
-        }
+        if (!IvfIndex.exists(s, n)) buildFull(s, d, emb, n)
         // DataFrame-face delete: the takedown set is a corpus fraction
         // (10% of vec_ids) — it must never transit the driver
         IvfIndex.delete(s, n, "vec_id",
           emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
-        IvfIndex.rebuild(s, n, "vec_id", "embedding")
-        graft.sources.Warehouse.writeTable(
-          s.range(1).toDF("done"), markT)
-      }
-      java.lang.Boolean.TRUE
-    }
-    n
-  }
-
-  /** Build-once wrapper for the REBUILT QUANTIZED index — the last
-    * lifecycle asymmetry closed: buildPq on the full corpus (models
-    * from the shared session cache — identical artifacts to the ivq
-    * rows), the standing takedown set tombstoned (health fires at 10%),
-    * then [[graft.operators.IvfIndex.rebuildPq]] retrains coarse AND
-    * codebooks on the live rows, re-encodes, folds the tombstones.
-    * Completion-marker gated like [[ensureRebuiltIndex]] (a run that
-    * died mid-chain re-runs the idempotent delete+rebuild rather than
-    * serving the never-rebuilt index).
-    */
-  private def ensureRebuiltPqIndex(s: SparkSession,
-      d: String): graft.operators.IvfIndex.PqNames = {
-    import graft.operators.IvfIndex
-    val fp = graft.util.Paths.corpusFingerprint(d, Seq("embeddings"))
-    val n = IvfIndex.pqNames("ivqr", fp)
-    val markT = s"ivqr_done_$fp"
-    cachedBuild(s"ivfidx_pq|ivqr|$fp") {
-      if (!s.catalog.tableExists(markT)) {
-        val emb = Tables.embeddings(s, d)
-        if (!IvfIndex.pqExists(s, n)) {
-          val k = math.max(8L, (emb.count() + 511) / 512).toInt
-          val coarse = cachedModel(s"ivf|${embKey(d)}|k=$k|it=2") {
-            graft.operators.Ivf.train(emb, "vec_id", "embedding", k = k, iters = 2) }
-          val books = cachedModel(s"pq|${embKey(d)}|m=4|k=4|it=2") {
-            graft.operators.Pq.train(emb, "vec_id", "embedding",
-              dim = 64, m = 4, k = 4, iters = 2) }
-          IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = k,
-            dim = 64, m = 4, pqK = 4,
-            coarseModel = Some(coarse), books = Some(books))
-        }
-        // DataFrame-face delete: the takedown set is a corpus fraction
-        // (10% of vec_ids) — it must never transit the driver
-        IvfIndex.delete(s, n, "vec_id",
-          emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
-        IvfIndex.rebuildPq(s, n, "vec_id", "embedding", emb,
-          dim = 64, m = 4, pqK = 4)
+        IvfIndex.rebuild(s, n, "vec_id", "embedding", source = Some(emb))
         graft.sources.Warehouse.writeTable(s.range(1).toDF("done"), markT)
       }
       java.lang.Boolean.TRUE
@@ -535,8 +489,7 @@ private[queries] object VectorQueries {
     cachedBuild(s"ivfidx|ivc|$fp") {
       if (!IvfIndex.exists(s, n)) {
         val emb = Tables.embeddings(s, d)
-        val k = math.max(8L, (emb.count() + 511) / 512).toInt
-        IvfIndex.build(emb, "vec_id", "embedding", n, k = k)
+        buildFull(s, d, emb, n)
         // DataFrame-face delete: the takedown set is a corpus fraction
         // (10% of vec_ids) — it must never transit the driver
         IvfIndex.delete(s, n, "vec_id",
@@ -560,19 +513,18 @@ private[queries] object VectorQueries {
     val fp = graft.util.Paths.corpusFingerprint(d, Seq("embeddings"))
     val n = IvfIndex.pqNames("ivqi", fp)
     cachedBuild(s"ivfidx_pq|ivqi|$fp") {
-      if (!IvfIndex.pqExists(s, n)) {
+      if (!IvfIndex.exists(s, n)) {
         val emb = Tables.embeddings(s, d)
         val old = emb.filter(col("vec_id") < 250)
-        val k = math.max(8L, (old.count() + 511) / 512).toInt
+        val k = graft.operators.Ivf.cellsFor(old.count())
         val coarse = cachedModel(s"ivf_stale|${embKey(d)}|k=$k|it=2") {
           graft.operators.Ivf.train(old, "vec_id", "embedding", k = k, iters = 2) }
         val books = cachedModel(s"pq_stale|${embKey(d)}|m=4|k=4|it=2") {
           graft.operators.Pq.train(old, "vec_id", "embedding",
             dim = 64, m = 4, k = 4, iters = 2) }
-        IvfIndex.buildPq(old, "vec_id", "embedding", n, k = k,
-          dim = 64, m = 4, pqK = 4,
-          coarseModel = Some(coarse), books = Some(books))
-        IvfIndex.appendBatchPq(s, n,
+        IvfIndex.build(old, "vec_id", "embedding", n, k = k,
+          models = Some(IvfIndex.Models(coarse, books)))
+        IvfIndex.appendBatch(s, n,
           emb.filter(col("vec_id") >= 250), "vec_id", "embedding")
       }
       java.lang.Boolean.TRUE
@@ -650,8 +602,8 @@ private[queries] object VectorQueries {
       (s, d) => {
         val n = ensurePqIndex(s, d, "ivq")
         graft.operators.IvfIndex
-          .searchPq(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
-            poolFactor = 4, queryFrom = Tables.embeddings(s, d))
+          .search(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
+            queryFrom = Some(Tables.embeddings(s, d)))
           .select(col("vec_id"),
             col("centroid_id").cast("long").as("centroid_id"))
       },
@@ -731,7 +683,7 @@ private[queries] object VectorQueries {
     // pins the rebuilt model's entire partition structure.
     Q("sim_index_rebuild_exec",
       (s, d) => {
-        val n = ensureRebuiltIndex(s, d)
+        val n = ensureRebuilt(s, d, "ivrr")(graft.operators.IvfIndex.names)
         graft.operators.IvfIndex.health(s, n, "vec_id")
       },
       Some(ivfRebuildExecSql)),
@@ -747,16 +699,16 @@ private[queries] object VectorQueries {
       (s, d) => {
         val n = ensurePqIndex(s, d, "ivqf", payloadCols = Seq("label"))
         graft.operators.IvfIndex
-          .searchPq(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
-            poolFactor = 4, queryFrom = Tables.embeddings(s, d),
+          .search(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
+            queryFrom = Some(Tables.embeddings(s, d)),
             payloadFilter = col("label") <= 3)
           .select(col("vec_id"),
             col("centroid_id").cast("long").as("centroid_id"))
       },
       Some(ivfPqFilteredSql)),
 
-    // The QUANTIZED index GROWN without retraining — appendBatchPq's
-    // driver row: the new slice (vec_id >= 250) is encoded with the
+    // The QUANTIZED index GROWN without retraining — appendBatch on the
+    // quantized layout: the new slice (vec_id >= 250) is encoded with the
     // EXISTING codebooks and assigned to the EXISTING coarse centroids
     // (both trained on the pre-ingest slice only), search spans old∪new
     // ADC-first through both stale models. The oracle re-derives the
@@ -767,8 +719,8 @@ private[queries] object VectorQueries {
       (s, d) => {
         val n = ensurePqIncIndex(s, d)
         graft.operators.IvfIndex
-          .searchPq(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
-            poolFactor = 4, queryFrom = Tables.embeddings(s, d))
+          .search(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
+            queryFrom = Some(Tables.embeddings(s, d)))
           .select(col("vec_id"),
             col("centroid_id").cast("long").as("centroid_id"),
             (col("vec_id") >= 250).as("is_new"))
@@ -779,7 +731,7 @@ private[queries] object VectorQueries {
     // asymmetry closed: at 100 TB the code layout IS the deployment, so
     // the health signal must point at an action it can take. The
     // takedown-tombstoned PQ index retrains coarse AND all four
-    // codebooks on its live rows (IvfIndex.rebuildPq — live vectors
+    // codebooks on its live rows (IvfIndex.rebuild — live vectors
     // fetched from the source table by id, seeds rank-based over the
     // live slice), re-encodes, folds tombstones; the output is the
     // quantized search on the rebuilt artifacts, so the oracle's
@@ -788,10 +740,10 @@ private[queries] object VectorQueries {
     // strictly more than a health row (which never sees the codebooks).
     Q("sim_index_pq_rebuild",
       (s, d) => {
-        val n = ensureRebuiltPqIndex(s, d)
+        val n = ensureRebuilt(s, d, "ivqr")(graft.operators.IvfIndex.pqNames)
         graft.operators.IvfIndex
-          .searchPq(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
-            poolFactor = 4, queryFrom = Tables.embeddings(s, d))
+          .search(s, n, "vec_id", "embedding", 0L, k = 10, nprobe = 2,
+            queryFrom = Some(Tables.embeddings(s, d)))
           .select(col("vec_id"),
             col("centroid_id").cast("long").as("centroid_id"))
       },
@@ -800,7 +752,7 @@ private[queries] object VectorQueries {
     // BATCH search on the QUANTIZED index — nightly scoring where the
     // code postings are the only index you have: the query set
     // broadcasts carrying each query's probe cells AND its m ADC
-    // dot-lookup tables (the per-query half of Pq.adcApproxCosine's
+    // dot-lookup tables (the per-query half of Pq.adcCosine's
     // state; codeword norms are query-independent and ride as one
     // literal), the pruned code scan joins probes on centroid_id and
     // ADC-scores each posting row only against the queries probing its
@@ -811,9 +763,9 @@ private[queries] object VectorQueries {
       (s, d) => {
         val n = ensurePqIndex(s, d, "ivq")
         graft.operators.IvfIndex
-          .searchBatchPq(s, n, "vec_id", "embedding",
-            Seq(0L, 1L, 2L, 3L, 4L), k = 3, nprobe = 2, poolFactor = 4,
-            queryFrom = Tables.embeddings(s, d))
+          .searchBatch(s, n, "vec_id", "embedding",
+            Seq(0L, 1L, 2L, 3L, 4L), k = 3, nprobe = 2,
+            queryFrom = Some(Tables.embeddings(s, d)))
           .select("qid", "vec_id")
           .orderBy("qid", "vec_id")
       },
@@ -911,7 +863,7 @@ private[queries] object VectorQueries {
     // hits pack into a fixed token budget (400) in rank order with
     // stop-at-overflow semantics, and only THEN are the winning
     // documents fetched — a pushed `doc_id IN (…)` point read of ≤10
-    // rows (the searchPq re-rank economics: retrieval runs entirely on
+    // rows (the quantized search's re-rank economics: retrieval runs entirely on
     // the indexes, the corpus is touched exactly once for exactly the
     // context that ships). The budgeting window ranks ≤10 rows. Oracle
     // recomputes fusion + fetch + prefix-sum truncation closed-form.
@@ -1057,7 +1009,7 @@ private[queries] object VectorQueries {
     // exact-cosine re-rank fetching ONLY the pool's vectors. Same ivq
     // tables as sim_index_pq (read-only after the serialized build);
     // the oracle is that row's standing twin, so the hash match proves
-    // SQL ≡ IvfIndex.searchPq ≡ the cross-engine ground truth.
+    // SQL ≡ IvfIndex.search ≡ the cross-engine ground truth.
     Q("s14_sql_pq_search",
       (s, d) => {
         graft.functions.Registry.registerSql(s)
@@ -1151,7 +1103,7 @@ private[queries] object VectorQueries {
     Q("sim_recall_matrix",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val kc = math.max(8L, (emb.count() + 511) / 512).toInt
+        val kc = graft.operators.Ivf.cellsFor(emb.count())
         val coarse = cachedModel(s"ivf|${embKey(d)}|k=$kc|it=2") {
           graft.operators.Ivf.train(emb, "vec_id", "embedding", k = kc, iters = 2) }
         val books = cachedModel(s"pq|${embKey(d)}|m=4|k=4|it=2") {
@@ -1182,7 +1134,7 @@ private[queries] object VectorQueries {
             // the full old∪new corpus — recall@10 of the grown-without-
             // retraining index vs the same exact ground truth
             val old = emb.filter(col("vec_id") < 250)
-            val kS = math.max(8L, (old.count() + 511) / 512).toInt
+            val kS = graft.operators.Ivf.cellsFor(old.count())
             val stale = cachedModel(s"ivf_stale|${embKey(d)}|k=$kS|it=2") {
               graft.operators.Ivf.train(old, "vec_id", "embedding", k = kS, iters = 2) }
             graft.operators.Ivf

@@ -392,12 +392,13 @@ object EventStream {
       val old = emb.filter(col(idCol) < splitId)
       // build returns the model; every micro-batch appends against it —
       // pass it through rather than re-reading the model table per batch
-      val cents = IvfIndex.build(old, idCol, vecCol, n, k = IvfIndex.cellsFor(old.count()))
+      val models = IvfIndex.build(old, idCol, vecCol, n,
+        k = graft.operators.Ivf.cellsFor(old.count()))
       // a fresh index has no tombstones to clear
       drainParquetFeed(spark,
           emb.filter(col(idCol) >= splitId).select(col(idCol), col(vecCol)),
           base, nFiles) {
-        IvfIndex.appendRows(spark, n, _, idCol, vecCol, cents)
+        IvfIndex.appendRows(spark, n, _, idCol, vecCol, models)
       }
       IvfIndex.stats(spark, n, idCol).localCheckpoint()
     } finally {
@@ -465,13 +466,13 @@ object EventStream {
   def drainIndexMaintain(spark: SparkSession, emb: DataFrame,
       idCol: String, vecCol: String, splitId: Long, deleteIds: Seq[Long],
       queryId: Long, k: Int, nprobe: Int, nFiles: Int = 3): DataFrame = {
-    import graft.operators.IvfIndex
+    import graft.operators.{Ivf, IvfIndex}
     maintainDrain(spark, emb, idCol, vecCol, splitId, deleteIds, nFiles, "ivdl")(
         IvfIndex.names(_, "stream")) { (n, old) =>
       // keep the built model for the per-batch appends (bounded k×dim
       // driver state)
-      val cents = IvfIndex.build(old, idCol, vecCol, n, k = IvfIndex.cellsFor(old.count()))
-      IvfIndex.appendRows(spark, n, _, idCol, vecCol, cents)
+      val models = IvfIndex.build(old, idCol, vecCol, n, k = Ivf.cellsFor(old.count()))
+      IvfIndex.appendRows(spark, n, _, idCol, vecCol, models)
     } { n =>
       IvfIndex.search(spark, n, idCol, vecCol, queryId, k = k,
         nprobe = nprobe, queryFrom = Some(emb))
@@ -479,34 +480,29 @@ object EventStream {
   }
 
   /** [[drainIndexMaintain]] on the QUANTIZED layout — the maintenance
-    * stream against the index a 100 TB deployment actually serves:
-    * built with [[graft.operators.IvfIndex.buildPq]] on the
-    * pre-boundary slice (stale coarse + stale codebooks), ingest
-    * micro-batches encode through the PERSISTED codebooks (zero Lloyd
-    * rounds per batch), takedown events tombstone by id, and the
-    * post-drain [[graft.operators.IvfIndex.searchPq]] must exclude every
-    * streamed takedown from its ADC pool and re-rank.
+    * stream against the index a 100 TB deployment actually serves: the
+    * index (m codebooks of `pqK` codewords) builds on the pre-boundary
+    * slice (stale coarse + stale codebooks), ingest micro-batches encode
+    * through the build's codebooks (zero Lloyd rounds per batch),
+    * takedown events tombstone by id, and the post-drain quantized
+    * search must exclude every streamed takedown from its ADC pool and
+    * re-rank.
     */
   def drainIndexMaintainPq(spark: SparkSession, emb: DataFrame,
       idCol: String, vecCol: String, splitId: Long, deleteIds: Seq[Long],
-      queryId: Long, k: Int, nprobe: Int, poolFactor: Int,
-      dim: Int, m: Int, pqK: Int, nFiles: Int = 3): DataFrame = {
-    import graft.operators.{Ivf, IvfIndex, Pq}
+      queryId: Long, k: Int, nprobe: Int, m: Int, pqK: Int,
+      nFiles: Int = 3): DataFrame = {
+    import graft.operators.{Ivf, IvfIndex}
     maintainDrain(spark, emb, idCol, vecCol, splitId, deleteIds, nFiles, "ivqd")(
         IvfIndex.pqNames(_, "stream")) { (n, old) =>
-      val k0 = IvfIndex.cellsFor(old.count())
-      // train the two bounded models here and hand them to the build AND
-      // to every micro-batch append — the per-batch model-table re-reads
-      // (k-row coarse + m×pqK codebooks) were pure repeat cost
-      val cents = Ivf.train(old, idCol, vecCol, k = k0, iters = 2)
-      val books = Pq.train(old, idCol, vecCol, dim, m, pqK, 2)
-      IvfIndex.buildPq(old, idCol, vecCol, n, k = k0,
-        dim = dim, m = m, pqK = pqK,
-        coarseModel = Some(cents), books = Some(books))
-      IvfIndex.appendRowsPq(spark, n, _, idCol, vecCol, cents, books)
+      // the build returns both models for the per-batch appends (the
+      // per-batch model-table re-reads were pure repeat cost)
+      val models = IvfIndex.build(old, idCol, vecCol, n,
+        k = Ivf.cellsFor(old.count()), m = m, pqK = pqK)
+      IvfIndex.appendRows(spark, n, _, idCol, vecCol, models)
     } { n =>
-      IvfIndex.searchPq(spark, n, idCol, vecCol, queryId, k = k,
-        nprobe = nprobe, poolFactor = poolFactor, queryFrom = emb)
+      IvfIndex.search(spark, n, idCol, vecCol, queryId, k = k,
+        nprobe = nprobe, queryFrom = Some(emb))
     }
   }
 

@@ -14,6 +14,10 @@ class PipelineSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Every index the suite builds; the last test drops them all. */
+  private val built = scala.collection.mutable.LinkedHashSet.empty[Tombstones.Index]
+  private def track[N <: Tombstones.Index](n: N): N = { built += n; n }
+
   test("gate → cluster → canonical → decontaminate → split → pack → shard composes") {
     val docs = Tables.documents(spark, sf)
     val total = docs.count()
@@ -122,7 +126,7 @@ class PipelineSpec extends SparkSpec {
     // only ADD files, compaction rewrites ONLY partitions holding a
     // tombstoned row — everything else's files never move.
     val emb = Tables.embeddings(spark, sf)
-    val vn = IvfIndex.names("pubspec_v", "spec")
+    val vn = track(IvfIndex.names("pubspec_v", "spec"))
     val old = emb.filter(col("vec_id") < 250)
     IvfIndex.build(old, "vec_id", "embedding", vn, k = 8)
     val atBuild = partFiles(vn.postings)
@@ -151,7 +155,7 @@ class PipelineSpec extends SparkSpec {
 
     // text side: same contract on the term buckets
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val tn = TextIndex.names("pubspec_t", "spec")
+    val tn = track(TextIndex.names("pubspec_t", "spec"))
     TextIndex.build(docs.filter(col("doc_id") < 250), "doc_id", "text", tn)
     val tBuild = partFiles(tn.postings)
     import spark.implicits._
@@ -182,23 +186,22 @@ class PipelineSpec extends SparkSpec {
   test("publish PQ maintenance is delta-only: codebooks untouched, appends add-only, compact scoped") {
     // The pipeline_publish_serving_pq contract at the file level: the
     // nightly never retrains either quantizer (centroids + codebooks
-    // tables byte-stable), appendBatchPq only ADDS files, and the
+    // tables byte-stable), appendBatch only ADDS files, and the
     // takedown compact rewrites ONLY cells holding a tombstoned row.
     val emb = Tables.embeddings(spark, sf)
-    val qn = IvfIndex.pqNames("pubspec_q", "spec")
+    val qn = track(IvfIndex.pqNames("pubspec_q", "spec"))
     val old = emb.filter(col("vec_id") < 250)
-    IvfIndex.buildPq(old, "vec_id", "embedding", qn, k = 8,
-      dim = 64, m = 4, pqK = 4)
+    IvfIndex.build(old, "vec_id", "embedding", qn, k = 8, m = 4, pqK = 4)
     val centsBuild = partFiles(qn.centroids)
     val booksBuild = partFiles(qn.codebooks)
     val atBuild = partFiles(qn.postings)
-    IvfIndex.appendBatchPq(spark, qn,
+    IvfIndex.appendBatch(spark, qn,
       emb.filter(col("vec_id") >= 250).localCheckpoint(),
       "vec_id", "embedding")
     val atAppend = partFiles(qn.postings)
     atBuild.foreach { case (cell, fs) =>
       assert(fs.subsetOf(atAppend.getOrElse(cell, Set.empty)),
-        s"appendBatchPq rewrote files in $cell")
+        s"appendBatch rewrote files in $cell")
     }
     // sparser fixture takedown than the catalog row's %10: with only 8
     // cells at spec scale a 10% set hits every cell and the
@@ -224,12 +227,19 @@ class PipelineSpec extends SparkSpec {
     assert(partFiles(qn.codebooks) === booksBuild,
       "nightly publish retrained the codebooks")
     // the folded index serves the post-publish corpus exactly
-    val served = IvfIndex.searchPq(spark, qn, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 2, poolFactor = 4, queryFrom = emb)
+    val served = IvfIndex.search(spark, qn, "vec_id", "embedding", 0L,
+      k = 10, nprobe = 2, queryFrom = Some(emb))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(served.intersect(
       old.filter(col("vec_id") % 50 === 3)
         .select("vec_id").collect().map(_.getLong(0)).toSet).isEmpty,
       "a folded takedown id resurfaced from the quantized search")
+  }
+
+  test("the suite drops every index it built: no pubspec_* table remains") {
+    built.foreach(Tombstones.drop(spark, _))
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("pubspec_"))
+    assert(left.isEmpty, left.mkString(", "))
   }
 }

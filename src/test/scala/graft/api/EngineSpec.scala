@@ -153,9 +153,9 @@ class EngineSpec extends SparkSpec {
     assert(missJobs(e.searchTweets(hashtags = Seq("casa"))) === 1)
     assert(missJobs(e.searchTweets(keyword = Some("house"), lang = Some("en"))) === 1)
     assert(missJobs(e.searchTweets(keyword = Some("house"), dateRange = Some(("04/13/2020", "04/18/2020")))) === 1)
-    // the global sort's sample, shuffle and result jobs; a per-request
-    // join ran a fourth, the broadcast that resolved the screen name
-    assert(missJobs(e.tweetsForUser("bob")) === 3)
+    // one collect of the filtered rows, ordered on the driver (a global
+    // sort ran 3: sample, shuffle, result; a per-request join a fourth)
+    assert(missJobs(e.tweetsForUser("bob")) === 1)
   }
 
   test("a miss on a new keyword reuses the generated code of the last one") {

@@ -16,7 +16,14 @@ class IvfIndexSpec extends SparkSpec {
   private val built = scala.collection.mutable.LinkedHashSet.empty[IvfIndex.Layout]
   private def track[N <: IvfIndex.Layout](n: N): N = { built += n; n }
   private def flat(fp: String) = track(IvfIndex.names("ivxspec", fp))
-  private def pq(fp: String) = track(IvfIndex.pqNames("ivxspec", fp))
+  private def pq(fp: String) = track(IvfIndex.pqNames("ivxspec_pq", fp))
+  /** Both layouts, under names no other test uses. */
+  private def layouts(fp: String): Seq[IvfIndex.Layout] = Seq(flat(fp), pq(fp))
+  private def label(n: IvfIndex.Layout) = n.getClass.getSimpleName
+  private def top(n: IvfIndex.Layout, k: Int = 10, nprobe: Int = 2,
+      from: Option[org.apache.spark.sql.DataFrame] = Some(emb)): Seq[Long] =
+    IvfIndex.search(spark, n, "vec_id", "embedding", 0L, k = k, nprobe = nprobe,
+      queryFrom = from).select("vec_id").collect().map(_.getLong(0)).toSeq
 
   private lazy val builtNames = {
     val n = flat("t1")
@@ -147,11 +154,8 @@ class IvfIndexSpec extends SparkSpec {
 
   test("quantized searchPq ≡ inline Pq.searchIvfPq on the same models (bit-identical ranking)") {
     val n = pq("t5")
-    IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
-      m = 4, pqK = 4)
-    val persisted = IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 2, poolFactor = 4, queryFrom = emb)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
+    IvfIndex.build(emb, "vec_id", "embedding", n, k = 8, m = 4, pqK = 4)
+    val persisted = top(n)
     val coarse = Ivf.train(emb, "vec_id", "embedding", k = 8, iters = 2)
     val books = Pq.train(emb, "vec_id", "embedding", dim = 64, m = 4, k = 4, iters = 2)
     val inline = Pq.searchIvfPq(emb, "vec_id", "embedding", coarse, books,
@@ -170,17 +174,16 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("searchBatchPq ≡ per-query searchPq over the same quantized index") {
-    val n = pq("t10")
-    IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
-      m = 4, pqK = 4)
+    val n = pq("t19")
+    IvfIndex.build(emb, "vec_id", "embedding", n, k = 8, m = 4, pqK = 4)
     val qids = Seq(0L, 1L, 2L)
-    val batch = IvfIndex.searchBatchPq(spark, n, "vec_id", "embedding",
-      qids, k = 5, nprobe = 2, poolFactor = 4, queryFrom = emb)
+    val batch = IvfIndex.searchBatch(spark, n, "vec_id", "embedding",
+      qids, k = 5, nprobe = 2, queryFrom = Some(emb))
       .select("qid", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val singles = qids.flatMap { qid =>
-      IvfIndex.searchPq(spark, n, "vec_id", "embedding", qid,
-        k = 5, nprobe = 2, poolFactor = 4, queryFrom = emb)
+      IvfIndex.search(spark, n, "vec_id", "embedding", qid,
+        k = 5, nprobe = 2, queryFrom = Some(emb))
         .select("vec_id").collect().map(r => qid -> r.getLong(0))
     }.toSet
     assert(batch === singles)
@@ -231,80 +234,53 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("compact folds tombstones into the layout: affected partitions rewritten, emptied cells dropped") {
-    val n = flat("t8")
-    IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
-    // empty one whole cell + delete one row of another
-    val byCell = spark.table(n.postings).select("vec_id", "centroid_id")
-      .collect().groupBy(_.getInt(1)).view.mapValues(_.map(_.getLong(0)).toSeq).toMap
-    // keep the query vector (vec_id 0) out of the emptied cell and the
-    // single-row delete — deleting the query itself is a different test
-    val (emptyCell, emptyIds) = byCell.filterNot(_._2.contains(0L)).minBy(_._2.size)
-    val otherCell = byCell.keys.filter(_ != emptyCell).head
-    val oneId = byCell(otherCell).filter(_ != 0L).head
-    IvfIndex.delete(spark, n, "vec_id", emptyIds :+ oneId)
-    val preCompact = IvfIndex.search(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 8).select("vec_id").collect().map(_.getLong(0)).toSeq
-    IvfIndex.compact(spark, n, "vec_id")
-    // tombstone table gone, physical rows gone, emptied partition dropped
-    assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)))
-    assert(spark.table(n.postings).count() === emb.count() - emptyIds.size - 1)
-    assert(spark.table(n.postings)
-      .filter(col("centroid_id") === emptyCell).count() === 0)
-    // reads are identical before and after the physical fold
-    val postCompact = IvfIndex.search(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 8).select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(postCompact === preCompact)
-  }
-
-  test("quantized compact parity: code postings fold tombstones exactly like flat ones") {
-    val n = pq("t11")
-    IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
-      m = 4, pqK = 4)
-    val byCell = spark.table(n.postings).select("vec_id", "centroid_id")
-      .collect().groupBy(_.getInt(1)).view.mapValues(_.map(_.getLong(0)).toSeq).toMap
-    val (emptyCell, emptyIds) = byCell.filterNot(_._2.contains(0L)).minBy(_._2.size)
-    val otherCell = byCell.keys.filter(_ != emptyCell).head
-    val oneId = byCell(otherCell).filter(_ != 0L).head
-    IvfIndex.delete(spark, n, "vec_id", emptyIds :+ oneId)
-    val preCompact = IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 8, queryFrom = emb)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    IvfIndex.compact(spark, n, "vec_id")
-    assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)))
-    assert(spark.table(n.postings).count() === emb.count() - emptyIds.size - 1)
-    assert(spark.table(n.postings)
-      .filter(col("centroid_id") === emptyCell).count() === 0)
-    val postCompact = IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 8, queryFrom = emb)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(postCompact === preCompact)
+    layouts("t8").foreach { n =>
+      IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
+      // empty one whole cell + delete one row of another
+      val byCell = spark.table(n.postings).select("vec_id", "centroid_id")
+        .collect().groupBy(_.getInt(1)).view.mapValues(_.map(_.getLong(0)).toSeq).toMap
+      // keep the query vector (vec_id 0) out of the emptied cell and the
+      // single-row delete — deleting the query itself is a different test
+      val (emptyCell, emptyIds) = byCell.filterNot(_._2.contains(0L)).minBy(_._2.size)
+      val otherCell = byCell.keys.filter(_ != emptyCell).head
+      val oneId = byCell(otherCell).filter(_ != 0L).head
+      IvfIndex.delete(spark, n, "vec_id", emptyIds :+ oneId)
+      // the flat layout reads the query vector off its own postings
+      val from = if (n.isInstanceOf[IvfIndex.Names]) None else Some(emb)
+      val preCompact = top(n, nprobe = 8, from = from)
+      IvfIndex.compact(spark, n, "vec_id")
+      // tombstone table gone, physical rows gone, emptied partition dropped
+      assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)), label(n))
+      assert(spark.table(n.postings).count() === emb.count() - emptyIds.size - 1, label(n))
+      assert(spark.table(n.postings)
+        .filter(col("centroid_id") === emptyCell).count() === 0, label(n))
+      // reads are identical before and after the physical fold
+      assert(top(n, nprobe = 8, from = from) === preCompact, label(n))
+    }
   }
 
   test("rebuild acts on the health signal: retrain on live rows, tombstones folded, decision clears") {
-    val n = flat("t12")
-    IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
-    val takedown = emb.filter(col("vec_id") % 10 === 3)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    IvfIndex.delete(spark, n, "vec_id", takedown)
-    assert(IvfIndex.health(spark, n, "vec_id")
-      .collect().head.getAs[Boolean]("rebuild_due"))
-    IvfIndex.rebuild(spark, n, "vec_id", "embedding")
-    val h = IvfIndex.health(spark, n, "vec_id").collect().head
-    assert(h.getAs[Long]("n_tombstones") === 0L)
-    assert(h.getAs[Long]("tomb_pct") === 0L)
-    assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)))
-    // the rebuilt index ≡ a fresh build on the live slice, search-for-search
     val live = emb.filter(col("vec_id") % 10 =!= 3)
-    val n2 = flat("t13")
-    IvfIndex.build(live, "vec_id", "embedding", n2,
-      k = math.max(8L, (live.count() + 511) / 512).toInt)
-    val rebuilt = IvfIndex.search(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 2, queryFrom = Some(emb))
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val fresh = IvfIndex.search(spark, n2, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 2, queryFrom = Some(emb))
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(rebuilt === fresh)
+    layouts("t12").zip(layouts("t13")).foreach { case (n, n2) =>
+      IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
+      val takedown = emb.filter(col("vec_id") % 10 === 3)
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      IvfIndex.delete(spark, n, "vec_id", takedown)
+      assert(IvfIndex.health(spark, n, "vec_id")
+        .collect().head.getAs[Boolean]("rebuild_due"), label(n))
+      IvfIndex.rebuild(spark, n, "vec_id", "embedding", source = Some(emb))
+      val h = IvfIndex.health(spark, n, "vec_id").collect().head
+      assert(h.getAs[Long]("n_tombstones") === 0L, label(n))
+      assert(h.getAs[Long]("tomb_pct") === 0L, label(n))
+      assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)), label(n))
+      // the rebuilt index ≡ a fresh build on the live slice, search-for-search
+      IvfIndex.build(live, "vec_id", "embedding", n2,
+        k = Ivf.cellsFor(live.count()))
+      assert(top(n) === top(n2), label(n))
+      // and the takedowns are physically gone, not just filtered
+      assert(spark.table(n.postings)
+        .filter(col("vec_id") % 10 === 3).count() === 0L, label(n))
+    }
   }
 
   test("health turns stats into the rebuild decision (integer-exact)") {
@@ -324,112 +300,78 @@ class IvfIndexSpec extends SparkSpec {
     assert(dirty.getAs[Long]("n_live") === emb.count() - ids.size)
   }
 
-  test("quantized lifecycle parity: appendBatchPq grows retrain-free; delete excludes from searchPq") {
-    val n = pq("t10")
+  test("lifecycle parity on both layouts: append grows retrain-free ≡ the inline stale model; delete excludes from search") {
     val old = emb.filter(col("vec_id") < 250)
-    IvfIndex.buildPq(old, "vec_id", "embedding", n, k = 8, dim = 64,
-      m = 4, pqK = 4)
-    IvfIndex.appendBatchPq(spark, n, emb.filter(col("vec_id") >= 250),
-      "vec_id", "embedding")
-    // grown index ≡ the inline stale composition: coarse + codebooks
-    // trained on the OLD slice, searched over the full corpus
-    val persisted = IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 2, poolFactor = 4, queryFrom = emb)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val coarse = Ivf.train(old, "vec_id", "embedding", k = 8, iters = 2)
-    val books = Pq.train(old, "vec_id", "embedding", dim = 64, m = 4, k = 4, iters = 2)
-    val inline = Pq.searchIvfPq(emb, "vec_id", "embedding", coarse, books,
-      0L, k = 10, nprobe = 2, poolFactor = 4)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(persisted === inline)
-    // tombstoned id never resurfaces from the quantized search either
-    val victim = persisted.head
-    IvfIndex.delete(spark, n, "vec_id", Seq(victim))
-    val after = IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L,
-      k = 10, nprobe = 2, poolFactor = 4, queryFrom = emb)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(!after.contains(victim))
-    assert(after.size === 10)
+    layouts("t10").foreach { n =>
+      IvfIndex.build(old, "vec_id", "embedding", n, k = 8)
+      IvfIndex.appendBatch(spark, n, emb.filter(col("vec_id") >= 250),
+        "vec_id", "embedding")
+      // grown index ≡ the inline stale composition: models trained on
+      // the OLD slice, searched over the full corpus
+      val persisted = top(n)
+      val coarse = Ivf.train(old, "vec_id", "embedding", k = 8, iters = 2)
+      val inline = (n match {
+        case _: IvfIndex.Names =>
+          Ivf.search(emb, "vec_id", "embedding", coarse, 0L, k = 10, nprobe = 2)
+        case _: IvfIndex.PqNames =>
+          Pq.searchIvfPq(emb, "vec_id", "embedding", coarse,
+            Pq.train(old, "vec_id", "embedding", dim = 64, m = 4, k = 4, iters = 2),
+            0L, k = 10, nprobe = 2, poolFactor = IvfIndex.PoolFactor)
+      }).select("vec_id").collect().map(_.getLong(0)).toSeq
+      assert(persisted === inline, label(n))
+      // a tombstoned id never resurfaces; the top-k backfills
+      val victim = persisted.head
+      IvfIndex.delete(spark, n, "vec_id", Seq(victim))
+      val after = top(n)
+      assert(!after.contains(victim), label(n))
+      assert(after.size === 10, label(n))
+    }
   }
 
-  test("rebuildPq acts on the signal: coarse + codebooks retrained on live rows ≡ fresh buildPq on the live slice") {
-    val n = pq("t15")
-    IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
-      m = 4, pqK = 4)
-    val takedown = emb.filter(col("vec_id") % 10 === 3)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    IvfIndex.delete(spark, n, "vec_id", takedown)
-    // the decision is computable on the quantized layout, and fires
-    assert(IvfIndex.health(spark, n, "vec_id")
-      .collect().head.getAs[Boolean]("rebuild_due"))
-    IvfIndex.rebuildPq(spark, n, "vec_id", "embedding", emb,
-      dim = 64, m = 4, pqK = 4)
-    val h = IvfIndex.health(spark, n, "vec_id").collect().head
-    assert(h.getAs[Long]("n_tombstones") === 0L)
-    assert(h.getAs[Long]("tomb_pct") === 0L)
-    assert(!spark.catalog.tableExists(IvfIndex.tombstoneTable(n)))
-    // rebuilt-PQ ≡ a fresh buildPq on the live slice, search-for-search
-    val live = emb.filter(col("vec_id") % 10 =!= 3)
-    val n2 = pq("t16")
-    IvfIndex.buildPq(live, "vec_id", "embedding", n2,
-      k = math.max(8L, (live.count() + 511) / 512).toInt,
-      dim = 64, m = 4, pqK = 4)
-    def top(nm: IvfIndex.PqNames) =
-      IvfIndex.searchPq(spark, nm, "vec_id", "embedding", 0L, k = 10,
-        nprobe = 2, poolFactor = 4, queryFrom = emb)
-        .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(top(n) === top(n2))
-    // and the takedowns are physically gone, not just filtered
-    assert(spark.table(n.postings)
-      .filter(col("vec_id") % 10 === 3).count() === 0L)
-  }
-
-  test("rebuildPq carries payload columns through the retrain (filtered index rebuilds intact)") {
-    val n = pq("t17")
-    IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
-      m = 4, pqK = 4, payloadCols = Seq("label"))
-    IvfIndex.delete(spark, n, "vec_id", Seq(3L, 13L, 23L))
-    IvfIndex.rebuildPq(spark, n, "vec_id", "embedding", emb,
-      dim = 64, m = 4, pqK = 4)
-    val stored = spark.table(n.postings).select("vec_id", "label").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+  test("rebuild carries payload columns through the retrain (filtered index rebuilds intact)") {
     val expect = emb.filter(!col("vec_id").isin(3L, 13L, 23L))
       .select("vec_id", "label").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(stored === expect)
+    layouts("t17").foreach { n =>
+      IvfIndex.build(emb, "vec_id", "embedding", n, k = 8,
+        payloadCols = Seq("label"))
+      IvfIndex.delete(spark, n, "vec_id", Seq(3L, 13L, 23L))
+      IvfIndex.rebuild(spark, n, "vec_id", "embedding", source = Some(emb))
+      val stored = spark.table(n.postings).select("vec_id", "label").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(stored === expect, label(n))
+    }
   }
 
-  test("rebuildPq is idempotent: a second rebuild on the already-rebuilt index is a no-op") {
-    val n = pq("t18")
-    IvfIndex.buildPq(emb, "vec_id", "embedding", n, k = 8, dim = 64,
-      m = 4, pqK = 4)
-    IvfIndex.delete(spark, n, "vec_id", Seq(3L, 13L, 23L, 33L, 43L))
-    IvfIndex.rebuildPq(spark, n, "vec_id", "embedding", emb,
-      dim = 64, m = 4, pqK = 4)
-    val once = spark.table(n.postings).orderBy("vec_id")
-      .collect().map(_.toSeq).toSeq
-    // the partial-run recovery story (the completion-marker wrappers):
-    // re-running the rebuild must converge to the same deterministic
-    // model and codes — live set unchanged, same seeds, same Lloyd
-    IvfIndex.rebuildPq(spark, n, "vec_id", "embedding", emb,
-      dim = 64, m = 4, pqK = 4)
-    val twice = spark.table(n.postings).orderBy("vec_id")
-      .collect().map(_.toSeq).toSeq
-    assert(once === twice)
+  test("rebuild is idempotent: a second rebuild on the already-rebuilt index is a no-op") {
+    layouts("t18").foreach { n =>
+      IvfIndex.build(emb, "vec_id", "embedding", n, k = 8)
+      IvfIndex.delete(spark, n, "vec_id", Seq(3L, 13L, 23L, 33L, 43L))
+      IvfIndex.rebuild(spark, n, "vec_id", "embedding", source = Some(emb))
+      def postings = spark.table(n.postings).orderBy("vec_id")
+        .collect().map(_.toSeq).toSeq
+      val once = postings
+      // the partial-run recovery story (the completion-marker wrappers):
+      // re-running the rebuild must converge to the same deterministic
+      // models and rows — live set unchanged, same seeds, same Lloyd
+      IvfIndex.rebuild(spark, n, "vec_id", "embedding", source = Some(emb))
+      assert(postings === once, label(n))
+    }
   }
 
   test("rebuild of a fully-tombstoned index refuses loudly (drop decision, not an empty retrain)") {
-    val n = flat("t14")
     val slice = emb.filter(col("vec_id") < 64)
-    IvfIndex.build(slice, "vec_id", "embedding", n, k = 8)
-    IvfIndex.delete(spark, n, "vec_id",
-      slice.select("vec_id").collect().map(_.getLong(0)).toSeq)
-    // retraining on zero rows would write an empty model that health
-    // then reports healthy — the guard must throw instead
-    val e = intercept[IllegalArgumentException] {
-      IvfIndex.rebuild(spark, n, "vec_id", "embedding")
+    layouts("t14").foreach { n =>
+      IvfIndex.build(slice, "vec_id", "embedding", n, k = 8)
+      IvfIndex.delete(spark, n, "vec_id",
+        slice.select("vec_id").collect().map(_.getLong(0)).toSeq)
+      // retraining on zero rows would write an empty model that health
+      // then reports healthy — the guard must throw instead
+      val e = intercept[IllegalArgumentException] {
+        IvfIndex.rebuild(spark, n, "vec_id", "embedding", source = Some(emb))
+      }
+      assert(e.getMessage.contains("zero live rows"), e.getMessage)
     }
-    assert(e.getMessage.contains("zero live rows"), e.getMessage)
   }
 
   test("streamed serving of an EMPTY query stream returns the contract schema, not path-not-found") {
@@ -442,7 +384,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("health on a fully-tombstoned index flags rebuild emphatically, never nulls") {
-    val n = flat("t11")
+    val n = flat("t20")
     val slice = emb.filter(col("vec_id") < 64)
     IvfIndex.build(slice, "vec_id", "embedding", n, k = 8)
     IvfIndex.delete(spark, n, "vec_id",

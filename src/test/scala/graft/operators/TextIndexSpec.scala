@@ -15,8 +15,12 @@ class TextIndexSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private val terms = Seq("join", "vector", "stream")
 
+  /** Every index the suite builds; the last test drops them all. */
+  private val built = scala.collection.mutable.LinkedHashSet.empty[TextIndex.Names]
+  private def track(n: TextIndex.Names): TextIndex.Names = { built += n; n }
+
   private lazy val names: TextIndex.Names = {
-    val n = TextIndex.names("titest", "spec")
+    val n = track(TextIndex.names("titest", "spec"))
     TextIndex.build(Tables.documents(spark, sf), "doc_id", "text", n)
     n
   }
@@ -99,7 +103,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("appendBatch-grown index is byte-identical to a from-scratch build (exact growth)") {
     val docs = Tables.documents(spark, sf)
-    val n2 = TextIndex.names("titest_inc", "spec")
+    val n2 = track(TextIndex.names("titest_inc", "spec"))
     TextIndex.build(docs.filter(col("doc_id") < 25), "doc_id", "text", n2)
     TextIndex.appendBatch(spark, n2,
       docs.filter(col("doc_id") >= 25), "doc_id", "text")
@@ -120,14 +124,14 @@ class TextIndexSpec extends SparkSpec {
 
   test("compact folds tombstones: serving equals a fresh build on the filtered corpus") {
     val docs = Tables.documents(spark, sf)
-    val n4 = TextIndex.names("titest_cmp", "spec")
+    val n4 = track(TextIndex.names("titest_cmp", "spec"))
     TextIndex.build(docs, "doc_id", "text", n4)
     val takedown = docs.filter(col("doc_id") % 10 === 3)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     TextIndex.delete(spark, n4, takedown)
     TextIndex.compact(spark, n4)
     assert(!spark.catalog.tableExists(TextIndex.tombstoneTable(n4)))
-    val fresh = TextIndex.names("titest_cmpf", "spec")
+    val fresh = track(TextIndex.names("titest_cmpf", "spec"))
     TextIndex.build(docs.filter(col("doc_id") % 10 =!= 3),
       "doc_id", "text", fresh)
     assert(TextIndex.bm25(spark, n4, terms, 1000).collect().toSeq ===
@@ -139,7 +143,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("compacting an entirely-deleted index drops every bucket and zeroes the stats") {
     val docs = Tables.documents(spark, sf).filter(col("doc_id") < 10)
-    val n5 = TextIndex.names("titest_all", "spec")
+    val n5 = track(TextIndex.names("titest_all", "spec"))
     TextIndex.build(docs, "doc_id", "text", n5)
     TextIndex.delete(spark, n5,
       docs.select("doc_id").collect().map(_.getLong(0)).toSeq)
@@ -160,7 +164,7 @@ class TextIndexSpec extends SparkSpec {
     assert(fromIndex === fromCorpus)
     assert(fromIndex.nonEmpty)
     // a tombstoned doc's matches vanish from the served results
-    val n6 = TextIndex.names("titest_ph", "spec")
+    val n6 = track(TextIndex.names("titest_ph", "spec"))
     TextIndex.build(docs, "doc_id", "text", n6)
     val victim = fromIndex.map(_._1).min
     TextIndex.delete(spark, n6, Seq(victim))
@@ -171,7 +175,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("an empty appendBatch (the no-new-docs night) leaves the index and stats untouched") {
     val docs = Tables.documents(spark, sf)
-    val n7 = TextIndex.names("titest_emp", "spec")
+    val n7 = track(TextIndex.names("titest_emp", "spec"))
     TextIndex.build(docs, "doc_id", "text", n7)
     val before = (spark.table(n7.postings).count(),
       spark.table(n7.stats).collect().head.toSeq)
@@ -197,7 +201,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("rebuilding under a name that previously deleted drops the stale tombstones") {
     val docs = Tables.documents(spark, sf)
-    val n8 = TextIndex.names("titest_reb", "spec")
+    val n8 = track(TextIndex.names("titest_reb", "spec"))
     TextIndex.build(docs, "doc_id", "text", n8)
     val victims = TextIndex.bm25(spark, n8, terms, 5)
       .collect().map(_.getLong(0)).toSeq
@@ -213,7 +217,7 @@ class TextIndexSpec extends SparkSpec {
   test("payload-filtered bm25 gates ranking only: kept docs keep their unfiltered scores") {
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), (col("doc_id") % 7).as("label"))
-    val n9 = TextIndex.names("titest_pay", "spec")
+    val n9 = track(TextIndex.names("titest_pay", "spec"))
     TextIndex.build(docs.filter(col("doc_id") < 25), "doc_id", "text", n9,
       payloadCols = Seq("label"))
     // a payload-built index grows like a bare one — the batch carries
@@ -256,21 +260,22 @@ class TextIndexSpec extends SparkSpec {
         expr("array_join(transform(sequence(0, 15), " +
           "j -> concat('term', lpad(cast((id * 16 + j) % 2048 as string), 4, '0'))), ' ')")
           .as("text"))
-      val built = TextIndex.names("tiskip_s", "spec")
-      TextIndex.build(docs, "doc_id", "text", built)
+      val source = track(TextIndex.names("tiskip_s", "spec"))
+      TextIndex.build(docs, "doc_id", "text", source)
       val postCols = Seq("term", "doc_id", "tf", "dl", "pos_list", "bucket")
       // rewrite the SAME rows into both layouts with the tiny-row-group
       // writer options: term-clustered (the build's sort) vs
       // doc-clustered (term-scattered — the pre-clustering layout's
       // effective order)
-      val clustered = TextIndex.Names("tiskip_c_post", built.stats)
+      val clustered = track(TextIndex.Names("tiskip_c_post", source.stats))
+      val scatteredT = track(TextIndex.Names("tiskip_u_post", source.stats))
       graft.sources.Warehouse.writePartitioned(
-        spark.table(built.postings).select(postCols.map(col): _*),
+        spark.table(source.postings).select(postCols.map(col): _*),
         clustered.postings, "bucket", sortCols = Seq("term", "doc_id"),
         writerOptions = tinyGroups)
       graft.sources.Warehouse.writePartitioned(
-        spark.table(built.postings).select(postCols.map(col): _*),
-        "tiskip_u_post", "bucket", sortCols = Seq("doc_id"),
+        spark.table(source.postings).select(postCols.map(col): _*),
+        scatteredT.postings, "bucket", sortCols = Seq("doc_id"),
         writerOptions = tinyGroups)
       def surfaced(table: String): Long = {
         val t = "term0042"
@@ -290,7 +295,7 @@ class TextIndexSpec extends SparkSpec {
           scans.head.metadata("PushedFilters"))
         scans.map(_.metrics("numOutputRows").value).sum
       }
-      val scattered = surfaced("tiskip_u_post")
+      val scattered = surfaced(scatteredT.postings)
       val sorted = surfaced(clustered.postings)
       // scattered: the term is in every row group → the whole ~4096-row
       // bucket surfaces; clustered: only the row groups holding the
@@ -308,5 +313,12 @@ class TextIndexSpec extends SparkSpec {
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
     assert(st.getLong(0) === tok.select("doc_id").distinct().count())
     assert(st.getLong(1) === tok.count())
+  }
+
+  test("the suite drops every index it built: no titest_* or tiskip_* table remains") {
+    built.foreach(Tombstones.drop(spark, _))
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(t => t.startsWith("titest_") || t.startsWith("tiskip_"))
+    assert(left.isEmpty, left.mkString(", "))
   }
 }

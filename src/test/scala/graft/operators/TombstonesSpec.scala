@@ -34,22 +34,15 @@ class TombstonesSpec extends SparkSpec {
     // every cell probed and k above the corpus: a search serves every
     // live row but the query
     def ids(df: DataFrame) = df.collect().map(_.getLong(0)).toSet
-    Seq(
-      Layout("flat", fl, "vec_id", emb,
-        () => IvfIndex.build(emb, "vec_id", "embedding", fl, k = 8),
-        IvfIndex.appendBatch(spark, fl, _, "vec_id", "embedding"),
-        IvfIndex.delete(spark, fl, "vec_id", _: Seq[Long]),
-        IvfIndex.delete(spark, fl, "vec_id", _: DataFrame),
-        () => ids(IvfIndex.search(spark, fl, "vec_id", "embedding", 0L,
-          k = 10000, nprobe = 8, queryFrom = Some(emb)))),
-      Layout("pq", pq, "vec_id", emb,
-        () => IvfIndex.buildPq(emb, "vec_id", "embedding", pq, k = 8,
-          dim = 64, m = 4, pqK = 4),
-        IvfIndex.appendBatchPq(spark, pq, _, "vec_id", "embedding"),
-        IvfIndex.delete(spark, pq, "vec_id", _: Seq[Long]),
-        IvfIndex.delete(spark, pq, "vec_id", _: DataFrame),
-        () => ids(IvfIndex.searchPq(spark, pq, "vec_id", "embedding", 0L,
-          k = 10000, nprobe = 8, queryFrom = emb))),
+    def ivf(label: String, n: IvfIndex.Layout) =
+      Layout(label, n, "vec_id", emb,
+        () => IvfIndex.build(emb, "vec_id", "embedding", n, k = 8),
+        IvfIndex.appendBatch(spark, n, _, "vec_id", "embedding"),
+        IvfIndex.delete(spark, n, "vec_id", _: Seq[Long]),
+        IvfIndex.delete(spark, n, "vec_id", _: DataFrame),
+        () => ids(IvfIndex.search(spark, n, "vec_id", "embedding", 0L,
+          k = 10000, nprobe = 8, queryFrom = Some(emb))))
+    Seq(ivf("flat", fl), ivf("pq", pq),
       Layout("text", tx, "doc_id", docs,
         () => TextIndex.build(docs, "doc_id", "text", tx),
         TextIndex.appendBatch(spark, tx, _, "doc_id", "text"),

@@ -87,8 +87,7 @@ class DegenerateInputSpec extends SparkSpec {
     assert(flat.count() === 5L)
     val pq = EventStream.drainIndexMaintainPq(spark, emb,
       "vec_id", "embedding", splitId = 1000L, deleteIds = Nil,
-      queryId = 0L, k = 3, nprobe = 2, poolFactor = 4,
-      dim = 64, m = 4, pqK = 4)
+      queryId = 0L, k = 3, nprobe = 2, m = 4, pqK = 4)
     assert(pq.columns.toSeq === Seq("vec_id", "centroid_id", "score"))
     assert(pq.count() === 3L)
     val text = EventStream.drainTextMaintain(spark,
@@ -179,15 +178,14 @@ class DegenerateInputSpec extends SparkSpec {
       Seq("qid", "vec_id", "centroid_id", "score"), "searchBatch(Nil)")
     // quantized layout: empty batch append leaves serving untouched
     val pn = track(IvfIndex.pqNames("degen_pq", "spec"))
-    if (!IvfIndex.pqExists(spark, pn))
-      IvfIndex.buildPq(emb, "vec_id", "embedding", pn, k = 8,
-        dim = 64, m = 4, pqK = 4)
-    val pqBefore = IvfIndex.searchPq(spark, pn, "vec_id", "embedding", 0L,
-      k = 5, nprobe = 2, poolFactor = 4, queryFrom = emb)
+    if (!IvfIndex.exists(spark, pn))
+      IvfIndex.build(emb, "vec_id", "embedding", pn, k = 8, m = 4, pqK = 4)
+    val pqBefore = IvfIndex.search(spark, pn, "vec_id", "embedding", 0L,
+      k = 5, nprobe = 2, queryFrom = Some(emb))
       .collect().map(_.getLong(0)).toSeq
-    IvfIndex.appendBatchPq(spark, pn, emb.limit(0), "vec_id", "embedding")
-    assert(IvfIndex.searchPq(spark, pn, "vec_id", "embedding", 0L,
-      k = 5, nprobe = 2, poolFactor = 4, queryFrom = emb)
+    IvfIndex.appendBatch(spark, pn, emb.limit(0), "vec_id", "embedding")
+    assert(IvfIndex.search(spark, pn, "vec_id", "embedding", 0L,
+      k = 5, nprobe = 2, queryFrom = Some(emb))
       .collect().map(_.getLong(0)).toSeq === pqBefore)
     // DataFrame-face delete with an EMPTY id frame (the no-takedown
     // night of the publish chain): serving untouched on BOTH layouts
@@ -196,8 +194,8 @@ class DegenerateInputSpec extends SparkSpec {
     IvfIndex.compact(spark, n, "vec_id")
     assert(top(10) === before)
     IvfIndex.delete(spark, pn, "vec_id", emb.limit(0).select("vec_id"))
-    assert(IvfIndex.searchPq(spark, pn, "vec_id", "embedding", 0L,
-      k = 5, nprobe = 2, poolFactor = 4, queryFrom = emb)
+    assert(IvfIndex.search(spark, pn, "vec_id", "embedding", 0L,
+      k = 5, nprobe = 2, queryFrom = Some(emb))
       .collect().map(_.getLong(0)).toSeq === pqBefore)
   }
 

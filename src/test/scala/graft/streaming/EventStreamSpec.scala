@@ -331,7 +331,7 @@ class EventStreamSpec extends SparkSpec {
     try {
       val old = emb.filter(col("vec_id") < 250)
       IvfIndex.build(old, "vec_id", "embedding", n,
-        k = math.max(8L, (old.count() + 511) / 512).toInt)
+        k = graft.operators.Ivf.cellsFor(old.count()))
       IvfIndex.appendBatch(spark, n, emb.filter(col("vec_id") >= 250),
         "vec_id", "embedding")
       IvfIndex.delete(spark, n, "vec_id", takedown)
@@ -387,8 +387,7 @@ class EventStreamSpec extends SparkSpec {
     val jobs = jobsDuring {
       streamed = EventStream.drainIndexMaintainPq(spark, emb,
         "vec_id", "embedding", splitId = 250L, deleteIds = takedown,
-        queryId = 0L, k = 10, nprobe = 2, poolFactor = 4,
-        dim = 64, m = 4, pqK = 4, nFiles = 3)
+        queryId = 0L, k = 10, nprobe = 2, m = 4, pqK = 4, nFiles = 3)
         .select("vec_id").collect().map(_.getLong(0)).toSeq
     }
     // 59 jobs before the three maintenance drains shared one
@@ -396,14 +395,13 @@ class EventStreamSpec extends SparkSpec {
     val n = IvfIndex.pqNames("ivxstream", "tq")
     try {
       val old = emb.filter(col("vec_id") < 250)
-      IvfIndex.buildPq(old, "vec_id", "embedding", n,
-        k = math.max(8L, (old.count() + 511) / 512).toInt,
-        dim = 64, m = 4, pqK = 4)
-      IvfIndex.appendBatchPq(spark, n, emb.filter(col("vec_id") >= 250),
+      IvfIndex.build(old, "vec_id", "embedding", n,
+        k = graft.operators.Ivf.cellsFor(old.count()), m = 4, pqK = 4)
+      IvfIndex.appendBatch(spark, n, emb.filter(col("vec_id") >= 250),
         "vec_id", "embedding")
       IvfIndex.delete(spark, n, "vec_id", takedown)
-      val batch = IvfIndex.searchPq(spark, n, "vec_id", "embedding", 0L,
-        k = 10, nprobe = 2, poolFactor = 4, queryFrom = emb)
+      val batch = IvfIndex.search(spark, n, "vec_id", "embedding", 0L,
+        k = 10, nprobe = 2, queryFrom = Some(emb))
         .select("vec_id").collect().map(_.getLong(0)).toSeq
       assert(streamed === batch)
       assert(streamed.intersect(takedown).isEmpty)
