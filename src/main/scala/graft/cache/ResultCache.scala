@@ -67,12 +67,11 @@ final class ResultCache(
 
   /** Insert with LRU eviction (cache.py:117-124). */
   def put(namespace: String, params: Seq[(String, String)], df: DataFrame): Seq[Row] =
-    store(keyOf(namespace, params), df)
+    store(keyOf(namespace, params), Answer.of(df))
 
-  private def store(k: String, df: DataFrame): Seq[Row] = {
-    val rows = df.collect().toSeq
-    synchronized(insert(k, Entry(rows, df.schema.toDDL, clock())))
-    rows
+  private def store(k: String, a: Answer): Seq[Row] = {
+    synchronized(insert(k, Entry(a.rows, a.schema.toDDL, clock())))
+    a.rows
   }
 
   /** Makes `k` the most-recent entry. Only a new key evicts the LRU head
@@ -85,12 +84,13 @@ final class ResultCache(
     entries.put(k, e)
   }
 
-  /** Memoizing wrapper: probe, else run + cache (cache.py:82-111). A miss
-    * on a key that another caller is already computing waits for that
-    * result instead of running `run`; if that computation throws, every
-    * waiter gets the exception and nothing is cached.
+  /** Memoizing wrapper: probe, else run + cache (cache.py:82-111). `run`
+    * returns the collected answer, so the cache stores its rows as they
+    * are. A miss on a key that another caller is already computing waits
+    * for that result instead of running `run`; if that computation throws,
+    * every waiter gets the exception and nothing is cached.
     */
-  def getOrElse(namespace: String, params: Seq[(String, String)])(run: => DataFrame): Seq[Row] = {
+  def getOrElse(namespace: String, params: Seq[(String, String)])(run: => Answer): Seq[Row] = {
     val k = keyOf(namespace, params)
     val probe = synchronized {
       lookup(k) match {
@@ -190,6 +190,15 @@ final class ResultCache(
 }
 
 object ResultCache {
+
+  /** A collected result: its rows and their schema (which the checkpoint
+    * needs even when there are no rows).
+    */
+  final case class Answer(rows: Seq[Row], schema: StructType)
+
+  object Answer {
+    def of(df: DataFrame): Answer = Answer(df.collect().toSeq, df.schema)
+  }
 
   /** Percent-encodes `%` and every char of `separators` in `value`, so
     * joining escaped values with any of those separators is injective. A

@@ -10,18 +10,27 @@ import org.apache.spark.sql.functions._
   * lookups per rendered row. Here the author lookup is one left join,
   * [[withAuthors]], which [[graft.api.Engine]] runs and persists once; a
   * search over that relation is filter → multi-key top-k (fused by
-  * Catalyst into TakeOrderedAndProject — no full sort materialization),
-  * one Spark job per request.
+  * Catalyst into TakeOrderedAndProject — no full sort materialization).
+  *
+  * [[search]] is the declarative formulation the catalog and the tests
+  * run. The engine serves the same answer from a scan it prepares once
+  * per request shape: the same [[Predicates.searchPredicate]] over
+  * parameters, a top-k per partition in [[Order]], merged on the driver.
   */
 object TweetSearch {
 
   val DefaultLimit = 50
   val PageSize     = 10
 
-  /** Core search: top-k tweets matching the accreted predicate, sorted by
-    * (retweet_count, favorite_count) DESC — the cache path's key order
-    * (cache.py:153; the direct path T1 uses a different order and a
-    * lexicographic created_at sort, documented quirk SURVEY §7.4#4).
+  /** The result order: (retweet_count, favorite_count) DESC — the cache
+    * path's key order (cache.py:153; the direct path T1 uses a different
+    * order and a lexicographic created_at sort, documented quirk SURVEY
+    * §7.4#4) — then `id_str`, so ties have one answer.
+    */
+  val Order: Seq[Column] = Seq(col("retweet_count").desc, col("favorite_count").desc, col("id_str"))
+
+  /** Core search: the top `limit` tweets matching the accreted predicate,
+    * in [[Order]].
     */
   def search(
       tweets: DataFrame,
@@ -31,8 +40,9 @@ object TweetSearch {
       dateRange: Option[(String, String)] = None,
       limit: Int = DefaultLimit): DataFrame =
     tweets
-      .filter(Predicates.searchPredicate(keyword, hashtags, lang, dateRange))
-      .orderBy(col("retweet_count").desc, col("favorite_count").desc, col("id_str"))
+      .filter(Predicates.searchPredicate(keyword.map(lit), Predicates.tags(hashtags),
+        lang.map(lit), dateRange.map { case (s, e) => (lit(s), lit(e)) }))
+      .orderBy(Order: _*)
       .limit(limit)
 
   /** The columns [[withAuthors]] appends, in order. */
@@ -68,7 +78,7 @@ object TweetSearch {
     */
   def page(ordered: DataFrame, pageNum: Int, pageSize: Int = PageSize): DataFrame =
     ordered
-      .orderBy(col("retweet_count").desc, col("favorite_count").desc, col("id_str"))
+      .orderBy(Order: _*)
       .offset((pageNum - 1) * pageSize)
       .limit(pageSize)
 

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** User-side queries (SURVEY §2.3 J1/J4, §3.2).
   *
@@ -18,7 +16,7 @@ object UserQueries {
     users.filter(col("id") === uid)
 
   /** F5: point read by screen_name (cache.py:174). */
-  def byScreenName(users: DataFrame, screenName: String): DataFrame =
+  def byScreenName(users: DataFrame, screenName: Column): DataFrame =
     users.filter(col("screen_name") === screenName)
 
   /** T4: top-k users by followers (app.py:156). */
@@ -31,51 +29,32 @@ object UserQueries {
   /** J4 chain: screen_name → that user's tweets, with optional
     * keyword/hashtag OR-refinement (implementing the *intended* semantics
     * of the reference's clobbered $or, cache.py:180-190) sorted like the
-    * reference (retweet_count, favorite_count DESC), every row kept.
-    *
-    * `tweetsWithAuthors` is [[TweetSearch.withAuthors]], which the engine
-    * joins once, so resolving the screen name is a filter on
-    * `author_screen_name`, not a join per request; the answer has the
-    * curated tweet columns only. Needs `users.id` unique, as that join
-    * does.
-    *
-    * Eager, one Spark job: the filter's rows are collected unordered
-    * (the scan keeps every task) and ordered on the driver, where a
-    * global `orderBy` would add a range-partition sample and a shuffle.
-    * The answer is a local frame. PRECONDITION: one user's tweets fit
-    * the driver, as the engine's cached answer already requires.
+    * reference (retweet_count, favorite_count DESC; [[TweetSearch.Order]]),
+    * every row kept. The declarative formulation the catalog and the
+    * tests run; the engine collects [[userTweets]] and orders it on the
+    * driver instead, which spares the global sort's sample and shuffle.
     */
   def tweetsForUser(
       tweetsWithAuthors: DataFrame,
       screenName: String,
       keyword: Option[String] = None,
-      hashtags: Seq[String] = Nil): DataFrame = {
-    val refine = (keyword, hashtags) match {
-      case (Some(k), hs) if hs.nonEmpty =>
-        Predicates.keywordMatch(k) || Predicates.hashtagIn(hs)
-      case (Some(k), _)              => Predicates.keywordMatch(k)
-      case (None, hs) if hs.nonEmpty => Predicates.hashtagIn(hs)
-      case _                         => lit(true)
-    }
-    val rows = tweetsWithAuthors
-      .filter(col("author_screen_name") === screenName && refine)
-      .drop(TweetSearch.AuthorColumns: _*)
-    val sorted = rows.collect().sorted(referenceOrder(rows.schema))
-    rows.sparkSession.createDataFrame(java.util.Arrays.asList(sorted: _*), rows.schema)
-  }
+      hashtags: Seq[String] = Nil): DataFrame =
+    userTweets(tweetsWithAuthors, lit(screenName), keyword.map(lit), Predicates.tags(hashtags))
+      .orderBy(TweetSearch.Order: _*)
 
-  /** `retweet_count DESC, favorite_count DESC, id_str ASC` as Spark
-    * orders them: nulls last under DESC and first under ASC, strings by
-    * their UTF-8 bytes, the counts as integers.
+  /** The unordered rows of [[tweetsForUser]]. `tweetsWithAuthors` is
+    * [[TweetSearch.withAuthors]], which the engine joins once, so
+    * resolving the screen name is a filter on `author_screen_name`, not a
+    * join per request; the answer has the curated tweet columns only.
+    * Needs `users.id` unique, as that join does.
     */
-  private def referenceOrder(schema: StructType): Ordering[Row] = {
-    def key[T: Ordering](name: String)(f: Any => T): Ordering[Row] = {
-      val i = schema.fieldIndex(name)
-      Ordering.Option[T].on(r => Option(r.get(i)).map(f))
-    }
-    implicit val utf8: Ordering[UTF8String] = (x, y) => x.compareTo(y)
-    def count(name: String) = key(name)(_.asInstanceOf[Number].longValue).reverse
-    count("retweet_count").orElse(count("favorite_count"))
-      .orElse(key("id_str")(v => UTF8String.fromString(v.toString)))
-  }
+  def userTweets(
+      tweetsWithAuthors: DataFrame,
+      screenName: Column,
+      keyword: Option[Column],
+      hashtags: Option[Column]): DataFrame =
+    tweetsWithAuthors
+      .filter(col("author_screen_name") === screenName &&
+        Predicates.searchPredicate(keyword, hashtags, None, None))
+      .drop(TweetSearch.AuthorColumns: _*)
 }

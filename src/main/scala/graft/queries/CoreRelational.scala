@@ -172,7 +172,7 @@ private[queries] object CoreRelational {
           val raw = graft.ingest.TweetIngest.readRaw(s, rawPath)
           val tAgg = tweets.agg(
             count(lit(1)).as("n_tweets"),
-            sum(when(graft.operators.Predicates.keywordMatch("house"), 1L)
+            sum(when(graft.operators.Predicates.keywordMatch(lit("house")), 1L)
               .otherwise(0L)).as("n_house"),
             coalesce(sum(size(col("retweets"))), lit(0)).cast("long")
               .as("n_retweet_elems"))

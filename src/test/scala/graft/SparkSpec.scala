@@ -16,20 +16,30 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Spark jobs started while `body` runs. A sentinel job marks the end:
-    * its start event arrives after every earlier one on the listener bus.
-    */
+  /** Spark jobs started while `body` runs. */
   def jobsDuring(body: => Unit): Int = {
-    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    eventsDuring(body).count(_.isInstanceOf[SparkListenerJobStart])
+  }
+
+  /** Job starts and other (e.g. SQL execution) events posted while `body`
+    * runs, in order. A sentinel job marks the end: its start event arrives
+    * after every earlier one on the listener bus.
+    */
+  def eventsDuring(body: => Unit): Seq[org.apache.spark.scheduler.SparkListenerEvent] = {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicBoolean
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     val sc = spark.sparkContext
     val Sentinel = "sparkspec.sentinel"
-    val started = new AtomicInteger()
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]()
     val drained = new AtomicBoolean()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(Sentinel) != null)) drained.set(true)
-        else started.incrementAndGet()
+        else if (!drained.get()) events.add(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        if (!drained.get()) events.add(e)
     }
     sc.addSparkListener(listener)
     try {
@@ -41,7 +51,7 @@ trait SparkSpec extends AnyFunSuite {
         assert(System.currentTimeMillis() < deadline, "listener bus did not drain")
         Thread.sleep(2)
       }
-      started.get()
+      events.toArray(Array.empty[SparkListenerEvent]).toSeq
     } finally sc.removeSparkListener(listener)
   }
 }

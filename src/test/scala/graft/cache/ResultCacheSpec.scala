@@ -1,6 +1,7 @@
 package graft.cache
 
 import graft.SparkSpec
+import graft.cache.ResultCache.Answer
 
 /** LRU + TTL semantics (reference cache.py:48-126, quirks fixed). */
 class ResultCacheSpec extends SparkSpec {
@@ -11,7 +12,7 @@ class ResultCacheSpec extends SparkSpec {
   test("getOrElse memoizes: second probe is a hit, no recompute") {
     val cache = new ResultCache(maxSize = 4)
     var computes = 0
-    def run = { computes += 1; df(3) }
+    def run = { computes += 1; Answer.of(df(3)) }
     val a = cache.getOrElse("t", Seq("k" -> "1"))(run)
     val b = cache.getOrElse("t", Seq("k" -> "1"))(run)
     assert(a === b && computes === 1)
@@ -20,7 +21,7 @@ class ResultCacheSpec extends SparkSpec {
 
   test("key is the full normalized param tuple (order-insensitive)") {
     val cache = new ResultCache(maxSize = 4)
-    cache.getOrElse("t", Seq("a" -> "1", "b" -> "2"))(df(1))
+    cache.getOrElse("t", Seq("a" -> "1", "b" -> "2"))(Answer.of(df(1)))
     assert(cache.get("t", Seq("b" -> "2", "a" -> "1")).isDefined)
     assert(cache.get("t", Seq("a" -> "1", "b" -> "3")).isEmpty)
     assert(cache.get("u", Seq("a" -> "1", "b" -> "2")).isEmpty) // namespace isolation
@@ -111,7 +112,7 @@ class ResultCacheSpec extends SparkSpec {
     val fresh = new ResultCache(maxSize = 8) // "restarted process"
     assert(fresh.restore(spark, path) === put.size)
     var computes = 0
-    val rows = fresh.getOrElse("u", Seq("q" -> "x")) { computes += 1; df(1) }
+    val rows = fresh.getOrElse("u", Seq("q" -> "x")) { computes += 1; Answer.of(df(1)) }
     assert(computes === 0, "restored entry must serve without recompute")
     assert(rows.map(r => (r.getAs[Int]("x"), r.getAs[String]("s"))).sorted
       === Seq((1, "v1"), (2, "v2"), (3, "v3")))
@@ -178,7 +179,7 @@ class ResultCacheSpec extends SparkSpec {
       def race(k: String)(result: => org.apache.spark.sql.DataFrame) = {
         val entered = new CountDownLatch(1)
         val release = new CountDownLatch(1)
-        def run = { computes.incrementAndGet(); entered.countDown(); release.await(); result }
+        def run = { computes.incrementAndGet(); entered.countDown(); release.await(); Answer.of(result) }
         val missesBefore = cache.misses.get()
         val first = Future(cache.getOrElse("t", Seq("k" -> k))(run))
         entered.await()
@@ -199,7 +200,7 @@ class ResultCacheSpec extends SparkSpec {
       assert(intercept[IllegalStateException](Await.result(d, 30.seconds)).getMessage === "boom")
       assert(computes.get() === 1)
       assert(cache.get("t", Seq("k" -> "boom")).isEmpty, "a failed computation must not be cached")
-      assert(cache.getOrElse("t", Seq("k" -> "boom"))(df(2)).size === 2)
+      assert(cache.getOrElse("t", Seq("k" -> "boom"))(Answer.of(df(2))).size === 2)
     } finally pool.shutdownNow()
   }
 

@@ -13,7 +13,7 @@ class SearchSpec extends SparkSpec {
   private lazy val users = { import spark.implicits._; TestFixtures.users.toDF() }
 
   test("F1 keyword regex is case-insensitive substring") {
-    val got = tweets.filter(Predicates.keywordMatch("house"))
+    val got = tweets.filter(Predicates.keywordMatch(lit("house")))
       .select("id_str").collect().map(_.getString(0)).sorted
     assert(got === Array("2", "5")) // 'house' and 'House'
 
@@ -33,7 +33,7 @@ class SearchSpec extends SparkSpec {
       try {
         def answers(c: org.apache.spark.sql.Column) = texts.select(col("id"), c)
           .collect().map(r => r.getString(0) -> Option(r.get(1))).sortBy(_._1).toSeq
-        assert(answers(Predicates.keywordMatch(kw)) === answers(col("text").rlike("(?i)" + kw)),
+        assert(answers(Predicates.keywordMatch(lit(kw))) === answers(col("text").rlike("(?i)" + kw)),
           s"keyword '$kw' under $factory")
       } finally {
         spark.conf.unset("spark.sql.codegen.factoryMode")
@@ -41,30 +41,30 @@ class SearchSpec extends SparkSpec {
       }
     }
     // a malformed pattern still fails the query
-    val e = intercept[Exception](texts.filter(Predicates.keywordMatch("(ho")).collect())
+    val e = intercept[Exception](texts.filter(Predicates.keywordMatch(lit("(ho"))).collect())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[java.util.regex.PatternSyntaxException]), e.toString)
   }
 
   test("F2 hashtag membership is exact and case-sensitive") {
-    assert(tweets.filter(Predicates.hashtagIn(Seq("corona")))
+    assert(tweets.filter(Predicates.hashtagIn(typedLit(Seq("corona"))))
       .count() === 2)
-    assert(tweets.filter(Predicates.hashtagIn(Seq("Corona"))).count() === 0)
-    assert(tweets.filter(Predicates.hashtagIn(Seq("casa", "politics")))
+    assert(tweets.filter(Predicates.hashtagIn(typedLit(Seq("Corona")))).count() === 0)
+    assert(tweets.filter(Predicates.hashtagIn(typedLit(Seq("casa", "politics"))))
       .count() === 2)
   }
 
   test("F3+F7 conjunctive accretion; F6 keyword-OR-hashtag intended semantics") {
     val pred = Predicates.searchPredicate(
-      Some("house"), Seq("casa"), Some("en"), None)
+      Some(lit("house")), Predicates.tags(Seq("casa")), Some(lit("en")), None)
     // (text~house OR #casa) AND lang=en → ids 2,5 (3 is es)
     val got = tweets.filter(pred).select("id_str").collect().map(_.getString(0)).sorted
     assert(got === Array("2", "5"))
   }
 
   test("F9 date range applies on parsed Twitter timestamps") {
-    val pred = Predicates.searchPredicate(None, Nil, None,
-      Some(("04/13/2020", "04/15/2020")))
+    val pred = Predicates.searchPredicate(None, None, None,
+      Some((lit("04/13/2020"), lit("04/15/2020"))))
     // end date coerces to midnight → 04/15 09:15 (id 4) is excluded
     val got = tweets.filter(pred).select("id_str").collect().map(_.getString(0)).sorted
     assert(got === Array("2", "3"))
@@ -90,8 +90,8 @@ class SearchSpec extends SparkSpec {
     // id 2 matches keyword 'house'... and id 3 matches #casa; no overlap here,
     // so force overlap: keyword 'a' matches 2,3,4,5 & #corona matches 2,3.
     val n = TweetSearch.unionSearch(tweets, "a", Seq("corona")).count()
-    assert(n === tweets.filter(Predicates.keywordMatch("a")).count()
-      + tweets.filter(Predicates.hashtagIn(Seq("corona"))).count())
+    assert(n === tweets.filter(Predicates.keywordMatch(lit("a"))).count()
+      + tweets.filter(Predicates.hashtagIn(typedLit(Seq("corona")))).count())
   }
 
   test("pagination slices an ordered result without gaps/overlap") {
@@ -128,7 +128,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("user point reads and top-by-followers") {
-    assert(UserQueries.byScreenName(users, "bob").count() === 1)
+    assert(UserQueries.byScreenName(users, lit("bob")).count() === 1)
     assert(UserQueries.byId(users, "u3").collect().head.getAs[String]("name") === "Carol")
     val top = UserQueries.topByFollowers(users, 2)
       .select("screen_name").collect().map(_.getString(0))

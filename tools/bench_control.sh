@@ -21,25 +21,29 @@
 #    kept under headline_ungated for forensics only.
 #
 # Usage: tools/bench_control.sh <prev-ref> [sfDir] [rounds] [passes-per-run]
-# Emits BENCH_control.json at the repo root: both totals, per-query times,
-# common-query ratios (head/prev) with the median + geomean, and the
-# per-binary drift fields.
+# Both binaries run with SPARK_GRAFT_CPUS cores if it is exported, else
+# with every core of the host (nproc). The prev-ref is checked out in a
+# throwaway clone under tmp/. Emits BENCH_control.json at the repo root:
+# both totals, per-query times, common-query ratios (head/prev) with the
+# median + geomean, and the per-binary drift fields.
 #
 # NEVER run anything else Spark-sized while this is running — two Spark
-# JVMs oversubscribe the 32 vCPUs and timings inflate 10-40x.
+# JVMs oversubscribe the host's cores and timings inflate 10-40x.
 set -euo pipefail
 PREV=${1:?usage: bench_control.sh <prev-ref> [sfDir] [rounds] [passes-per-run]}
 SF=${2:-/root/testdata/sf0.1}
 ROUNDS=${3:-3}
 PASSES=${4:-1}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 ROOT=$(git -C "$(dirname "$0")/.." rev-parse --show-toplevel)
 WT=$ROOT/tmp/bench_ctl_prev
 mkdir -p "$ROOT/tmp"
-git -C "$ROOT" worktree remove --force "$WT" 2>/dev/null || true
-git -C "$ROOT" worktree add --force "$WT" "$PREV" >/dev/null
+rm -rf "$WT"
+git clone --quiet "$ROOT" "$WT"
+git -C "$WT" checkout --quiet "$PREV"
 
 run_bench() { # run_bench <dir> <tag>
-  (cd "$1" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_PASSES="$PASSES" \
+  (cd "$1" && SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_PASSES="$PASSES" \
     sbt -batch "runMain graft.Bench" > "$ROOT/tmp/bench_ctl_$2.log" 2>&1)
   cp "$1/BENCH.json" "$ROOT/tmp/bench_ctl_$2.json"
 }
@@ -59,7 +63,7 @@ python3 "$ROOT/tools/bench_control_merge.py" --prev-ref "$PREV" \
   --prev "${PREV_FILES[@]}" \
   --head "${HEAD_FILES[@]}" \
   > "$ROOT/BENCH_control.json"
-git -C "$ROOT" worktree remove --force "$WT"
+rm -rf "$WT"
 python3 -c "
 import json
 d = json.load(open('$ROOT/BENCH_control.json'))
